@@ -39,11 +39,13 @@ from fsharp_dataframe_spark.sources.parquet import load_table
 # input at least once per process (bench warm-up primes it through
 # warm_fixture_caches).  Query RESULTS are unaffected: every consumer
 # uses n only to derive the same deterministic fixture ids.
-_TABLE_COUNT_MEMO: dict[tuple[int, str, str], int] = {}
+# Keyed on the application id, not id(spark): a session created after
+# stop() can reuse the old object's address, but never its id.
+_TABLE_COUNT_MEMO: dict[tuple[str, str, str], int] = {}
 
 
 def _table_count(spark, sf_dir: str, table: str = "documents") -> int:
-    key = (id(spark), sf_dir, table)
+    key = (spark.sparkContext.applicationId, sf_dir, table)
     v = _TABLE_COUNT_MEMO.get(key)
     if v is None:
         v = load_table(spark, sf_dir, table).count()
@@ -1437,7 +1439,8 @@ def q_embed_incr_dedup(spark, sf) -> DataFrame:
     old = emb.filter(F.col("vec_id") % 5 != 4)
     # total_vectors: new + existing partition the table, so the input
     # row count bounds both matrices — gates the broadcast verify
-    # (r16: no candidate dedup exchange, no vector attach joins)
+    # (candidates are deduped before the broadcast verify, which
+    # needs no vector attach joins)
     return (cross_cosine_near_dup_pairs(new, old, threshold=0.4,
                                         dim=64, n_bits=n_bits,
                                         n_tables=n_tables,

@@ -68,10 +68,31 @@ def shingle_table(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     )
 
 
+def _shingle_arrays(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(id, _sh): each document's distinct shingle ARRAY, tokenized once
+    and persisted (MEMORY_AND_DISK, spillable) for every consumer of
+    one call — the in-session equivalent of a pipeline writing its
+    shingle table before the joins.  Consumers explode it, take its
+    size or intersect it per pair from the cached arrays; none of them
+    re-runs spread() or the tokenizer.  Blocks are released by
+    util.release_cached()/cache_scope() or the ContextCleaner."""
+    from fsharp_dataframe_spark.functions.util import spread, track_persist
+
+    return track_persist(spread(df, id_col, text_col).select(
+        F.col(id_col), word_shingles(F.col(text_col), n).alias("_sh")))
+
+
+def _explode_shingles(arrays: DataFrame, id_col: str) -> DataFrame:
+    """(id, _n, shingle) from a persisted _shingle_arrays relation:
+    _n = the document's full distinct-shingle count, read off the
+    cached array and carried on every exploded row."""
+    return arrays.select(F.col(id_col), F.size("_sh").cast("long").alias("_n"),
+                         F.explode("_sh").alias("shingle"))
+
+
 def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                         n: int = 3, threshold: float = 0.5,
-                        max_doc_freq: int | None = None,
-                        reuse_shingles: bool = True) -> DataFrame:
+                        max_doc_freq: int | None = None) -> DataFrame:
     """Exact n-gram Jaccard similarity for all pairs sharing >=1 shingle.
 
     explode → self-join on shingle (the join key distributes by
@@ -84,123 +105,95 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "
     from CANDIDATE GENERATION (its self-join bucket is quadratic in
     its document frequency — one boilerplate phrase shared by 1M docs
     is 5·10¹¹ join rows in a single key), and the surviving candidate
-    pairs are re-scored with the skew-immune per-pair intersection
-    (jaccard_verify_pairs), so every emitted jaccard is still EXACT
-    over the FULL shingle sets (hot shingles included).  Recall
-    contract: a pair is found iff it shares at least one sub-cap
-    shingle — pairs whose overlap is exclusively boilerplate hotter
-    than the cap are (deliberately) not near-duplicates worth pairing.
-    ``reuse_shingles`` materializes the (id, shingle) relation once
-    (MEMORY_AND_DISK, spillable) before fanning it out to the join's
-    two sides and the per-doc size aggregate.  Without it Catalyst
-    plans each consumer as its own subtree, so the corpus is
-    re-tokenized FOUR times per query (measured: both join sides plus
-    two copies of the size aggregate — broadcast build sides cannot
-    share a shuffle exchange).  Tokenization is the CPU-heavy step;
-    this is the in-session equivalent of a pipeline writing its
-    shingle table to parquet before the pair join.  Blocks are released
-    deterministically via util.release_cached()/cache_scope() (pipeline
-    callers) or by the ContextCleaner when the result goes out of scope.
+    pairs are corrected by their exact hot-shingle overlap, so every
+    emitted jaccard is still EXACT over the FULL shingle sets (hot
+    shingles included).  Recall contract: a pair is found iff it
+    shares at least one sub-cap shingle — pairs whose overlap is
+    exclusively boilerplate hotter than the cap are (deliberately) not
+    near-duplicates worth pairing.
+
+    Shape notes:
+    - the corpus is tokenized ONCE into a persisted (id, shingle-array)
+      relation (_shingle_arrays); the join sides, the hot-shingle
+      probe and the hot arrays all explode the cached arrays.
+    - each exploded row carries its document's set size (size of the
+      cached array), and the pair aggregate takes the max of each side
+      — no per-document size aggregate, no size joins.  This is only
+      cheap because the array is persisted: over an unpersisted
+      projection, project collapsing pushes size(word_shingles(text))
+      AFTER the Generate and re-tokenizes per exploded shingle row
+      (measured 40x worse), which is why there is no un-persisted
+      variant of this function.
+    - a posting-list variant (collect_list per shingle + double
+      explode) is ~25x worse: hot shingles expand quadratically
+      inside single tasks, while the sort-merge join streams them.
     """
-    from fsharp_dataframe_spark.functions.util import track_persist
-
-    def _mat(rel: DataFrame) -> DataFrame:
-        return track_persist(rel) if reuse_shingles else rel
-
+    sh = _explode_shingles(_shingle_arrays(df, id_col, text_col, n), id_col)
+    pairs, inter = _pair_counts(sh, id_col), F.col("_inter")
     if max_doc_freq is not None:
-        # Guarded EXACT path, decomposed so no second tokenization pass
-        # and no per-pair full-array intersect are needed:
-        #   inter(a,b) = inter_subcap(a,b) + |hot(a) ∩ hot(b)|
-        # inter_subcap falls out of the capped self-join's aggregation
-        # (the same count shape as the unguarded path, minus hot keys);
-        # the hot correction joins per-doc HOT-shingle arrays, which
-        # are tiny by construction — a doc holds at most a handful of
-        # above-cap boilerplate shingles, so the per-pair payload is
-        # bytes, not the full shingle set.  Union uses FULL set sizes,
-        # so every emitted jaccard is exact over the full sets.
-        sh_all = _mat(shingle_table(df, id_col, text_col, n))
-        hot = (sh_all.groupBy("shingle").agg(F.count("*").alias("_df"))
+        hot = (sh.groupBy("shingle").agg(F.count("*").alias("_df"))
                .filter(F.col("_df") > max_doc_freq).select("shingle"))
         # ADAPTIVE: when the corpus has no shingle above the cap (the
-        # clean common case) the whole hot machinery — two anti-joins,
+        # clean common case) the whole hot machinery — the anti-join,
         # hot-array aggregates, correction joins — is dead weight
         # (measured +4s at sf0.1).  Probing emptiness is one small
-        # aggregate over the ALREADY-PERSISTED shingle relation, whose
+        # aggregate over the persisted array relation, whose
         # materialization the final action reuses; with skew present
-        # the guarded plan below runs, which is the point of the cap.
-        if reuse_shingles and hot.isEmpty():
-            return _ngram_pairs_plain(sh_all, id_col, threshold)
-        # capped feeds BOTH self-join sides: materialize it too, or the
-        # anti-join against the hot set runs once per side
-        capped = _mat(sh_all.join(hot, on="shingle", how="left_anti"))
-        sizes = sh_all.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-        l, r = capped.alias("l"), capped.alias("r")
-        pairs = (
-            l.join(r, on="shingle")
-            .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-            .groupBy(F.col(f"l.{id_col}").alias("id_a"),
-                     F.col(f"r.{id_col}").alias("id_b"))
-            .agg(F.count("*").alias("_inter_sub"))
-        )
-        hot_arrays = (sh_all.join(hot, on="shingle")
-                      .groupBy(id_col)
-                      .agg(F.collect_list("shingle").alias("_hot")))
-        empty = F.array().cast("array<string>")
-        ha = hot_arrays.select(F.col(id_col).alias("id_a"),
-                               F.col("_hot").alias("_hot_a"))
-        hb = hot_arrays.select(F.col(id_col).alias("id_b"),
-                               F.col("_hot").alias("_hot_b"))
-        sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("na"))
-        sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("nb"))
-        inter = (F.col("_inter_sub")
-                 + F.size(F.array_intersect(F.coalesce(F.col("_hot_a"), empty),
-                                            F.coalesce(F.col("_hot_b"), empty))))
-        return (
-            pairs.join(ha, "id_a", "left").join(hb, "id_b", "left")
-            .join(sa, "id_a").join(sb, "id_b")
-            .withColumn("jaccard",
-                        F.round(inter / (F.col("na") + F.col("nb") - inter), 4))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
-    # Shape notes (both alternatives measured at sf0.1):
-    # - join sides stay NARROW (id, shingle); doc shingle-counts come
-    #   from a separate tiny aggregate broadcast-joined onto the
-    #   aggregated pairs.  Carrying n_sh inline through the explode is
-    #   40x worse: project collapsing pushes size(word_shingles(text))
-    #   AFTER the Generate, re-tokenizing per exploded shingle row.
-    # - a posting-list variant (collect_list per shingle + double
-    #   explode) is ~25x worse: hot shingles expand quadratically
-    #   inside single tasks, while the sort-merge join streams them.
-    base = _mat(shingle_table(df, id_col, text_col, n))
-    return _ngram_pairs_plain(base, id_col, threshold)
-
-
-def _ngram_pairs_plain(shingles: DataFrame, id_col: str,
-                       threshold: float) -> DataFrame:
-    """All-pairs exact jaccard from an (id, shingle) relation: shingle
-    self-join → per-pair intersection counts → size join."""
-    sh = shingles.alias("l")
-    sizes = shingles.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    r = shingles.alias("r")
-    pairs = (
-        sh.join(r, on="shingle")
-        .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .groupBy(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
-        .agg(F.count("*").alias("inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("nb"))
-    # no explicit broadcast hint: the size table is one row per DOC
-    # (O(corpus) at scale, a driver-OOM risk if force-broadcast); AQE
-    # broadcasts it when it is actually small and shuffle-joins when not
-    out = (
-        pairs.join(sa, "id_a").join(sb, "id_b")
-        .withColumn("jaccard", F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 4))
+        # the guarded plan runs, which is the point of the cap.
+        if not hot.isEmpty():
+            pairs, inter = _capped_pair_counts(sh, hot, id_col)
+    return (
+        pairs.withColumn("jaccard",
+                         F.round(inter / (F.col("na") + F.col("nb") - inter), 4))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return out
+
+
+def _pair_counts(sh: DataFrame, id_col: str) -> DataFrame:
+    """(id_a, id_b, _inter, na, nb) from an (id, _n, shingle) relation:
+    shingle self-join → per-pair shared-shingle count, with each side's
+    set size carried through the join (constant per id, so max)."""
+    l, r = sh.alias("l"), sh.alias("r")
+    return (
+        l.join(r, on="shingle")
+        .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
+        .groupBy(F.col(f"l.{id_col}").alias("id_a"),
+                 F.col(f"r.{id_col}").alias("id_b"))
+        .agg(F.count("*").alias("_inter"),
+             F.max("l._n").alias("na"), F.max("r._n").alias("nb"))
+    )
+
+
+def _capped_pair_counts(sh: DataFrame, hot: DataFrame,
+                        id_col: str) -> tuple[DataFrame, Column]:
+    """The guarded EXACT path of ngram_jaccard_pairs: pair counts and
+    the exact intersection size, with no per-pair full-array intersect:
+      inter(a,b) = inter_subcap(a,b) + |hot(a) ∩ hot(b)|
+    inter_subcap falls out of the capped self-join's aggregation; the
+    hot correction joins per-doc HOT-shingle arrays, which are tiny by
+    construction — a doc holds at most a handful of above-cap
+    boilerplate shingles.  Set sizes ride on the rows (_n), so the
+    union uses FULL set sizes and every emitted jaccard is exact."""
+    from fsharp_dataframe_spark.functions.util import track_persist
+
+    # capped feeds BOTH self-join sides: materialize it, or the
+    # anti-join against the hot set runs once per side
+    capped = track_persist(sh.join(hot, on="shingle", how="left_anti"))
+    hot_arrays = (sh.join(hot, on="shingle")
+                  .groupBy(id_col)
+                  .agg(F.collect_list("shingle").alias("_hot")))
+    ha = hot_arrays.select(F.col(id_col).alias("id_a"),
+                           F.col("_hot").alias("_hot_a"))
+    hb = hot_arrays.select(F.col(id_col).alias("id_b"),
+                           F.col("_hot").alias("_hot_b"))
+    empty = F.array().cast("array<string>")
+    inter = (F.col("_inter")
+             + F.size(F.array_intersect(F.coalesce(F.col("_hot_a"), empty),
+                                        F.coalesce(F.col("_hot_b"), empty))))
+    pairs = (_pair_counts(capped, id_col)
+             .join(ha, "id_a", "left").join(hb, "id_b", "left"))
+    return pairs, inter
 
 
 def minhash_signatures(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -231,10 +224,19 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
     the shingle-construction expression into every one of the k
     branches, so tokenization ran k times per row.
     """
+    return _signatures(shingle_table(df, id_col, text_col, n), id_col, k,
+                       hash_family)
+
+
+def _signatures(sh: DataFrame, id_col: str, k: int,
+                hash_family: str) -> DataFrame:
+    """minhash_signatures over an already-exploded (id, shingle)
+    relation."""
     # r16 (guide §7.3): aggregates rendered as SQL text — the former
     # Column-built k-ary list cost ~250 py4j round-trips of pure
     # driver time per call; the parsed expressions are identical
-    # (oracle-re-verified).
+    # (oracle-re-verified).  All k minima sit in ONE array-valued
+    # aggregate expression: one parse, not one F.expr + alias each.
     if hash_family == "md5":
         def perm_sql(i: int) -> str:
             return (f"substring(md5(concat('{i // 4}|', shingle)),"
@@ -244,13 +246,8 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
             return f"xxhash64(concat('{i}|', shingle))"
     else:
         raise ValueError(f"unknown hash_family {hash_family!r}")
-    sh = shingle_table(df, id_col, text_col, n)
-    mins = sh.groupBy(id_col).agg(*[
-        F.expr(f"min({perm_sql(i)})").alias(f"_h{i}") for i in range(k)
-    ])
-    arr = ",".join(f"_h{i}" for i in range(k))
-    return mins.select(F.col(id_col),
-                       F.expr(f"array({arr})").alias("minhash"))
+    mins = ",".join(f"min({perm_sql(i)})" for i in range(k))
+    return sh.groupBy(id_col).agg(F.expr(f"array({mins}) AS minhash"))
 
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -269,6 +266,14 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
     DuckDB oracle; band signatures then hash with md5 too, used only
     for equality so the digest string itself is the join key).
     """
+    sigs = minhash_signatures(df, id_col, text_col, n, k,
+                              hash_family=hash_family)
+    return _lsh_pairs(sigs, id_col, k, bands, threshold, hash_family)
+
+
+def _lsh_pairs(sigs: DataFrame, id_col: str, k: int, bands: int,
+               threshold: float, hash_family: str) -> DataFrame:
+    """minhash_lsh_pairs from a (id, minhash) signature relation."""
     from fsharp_dataframe_spark.functions.util import track_persist
 
     r = k // bands
@@ -278,8 +283,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
     # aggregate — sketch tables are O(corpus row count), not O(corpus
     # bytes), so this caches cheaply even when the corpus itself could
     # not
-    sigs = track_persist(minhash_signatures(df, id_col, text_col, n, k,
-                                            hash_family=hash_family))
+    sigs = track_persist(sigs)
     hf = "md5" if hash_family == "md5" else "xxhash64"
     band_sqls = ",".join(
         f"{hf}(concat_ws(','," + ",".join(
@@ -327,15 +331,14 @@ def jaccard_verify_pairs(df: DataFrame, pairs: DataFrame,
     O(|pairs| · doc_len), independent of shingle frequency skew —
     the only shape that survives when candidates come from LSH at
     100 TB."""
-    from fsharp_dataframe_spark.functions.util import spread, track_persist
+    return _verify(_shingle_arrays(df, id_col, text_col, n), pairs, id_col)
 
-    # the (id, shingle-array) relation feeds both the id_a and id_b
-    # probes; materialize it once (spillable) — the in-session
-    # equivalent of writing the shingle table before the verify join
-    sh = track_persist(spread(df, id_col, text_col).select(
-        F.col(id_col), word_shingles(F.col(text_col), n).alias("_sh")))
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sh_a"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sh_b"))
+
+def _verify(arrays: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
+    """jaccard_verify_pairs over a persisted _shingle_arrays relation,
+    which feeds both the id_a and the id_b probe."""
+    a = arrays.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sh_a"))
+    b = arrays.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sh_b"))
     j = pairs.select("id_a", "id_b").join(a, "id_a").join(b, "id_b")
     inter = F.size(F.array_intersect(F.col("_sh_a"), F.col("_sh_b")))
     union = F.size(F.col("_sh_a")) + F.size(F.col("_sh_b")) - inter
@@ -393,10 +396,15 @@ def near_dedup_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     The LSH estimate admits candidates down to ``threshold -
     candidate_margin`` so near-threshold pairs are not lost to
     signature noise; the exact verification then decides.  Both stages
-    are skew-safe: no all-pairs join ever touches the full corpus."""
-    cands = minhash_lsh_pairs(df, id_col, text_col, n, k, bands,
-                              threshold=max(0.0, threshold - candidate_margin))
-    exact = jaccard_verify_pairs(df, cands, id_col, text_col, n)
+    are skew-safe: no all-pairs join ever touches the full corpus.
+    The corpus is spread and tokenized ONCE: one persisted
+    (id, shingle-array) relation feeds both the signatures (exploded)
+    and the verify (intersected per pair)."""
+    arrays = _shingle_arrays(df, id_col, text_col, n)
+    sigs = _signatures(_explode_shingles(arrays, id_col), id_col, k, "xxh64")
+    cands = _lsh_pairs(sigs, id_col, k, bands,
+                       max(0.0, threshold - candidate_margin), "xxh64")
+    exact = _verify(arrays, cands, id_col)
     return exact.filter(F.col("jaccard") >= threshold)
 
 

@@ -12,57 +12,89 @@ through B — component-wise canonicalization is the correct endpoint.
 Algorithm: alternating large-star / small-star contraction (Kiveris,
 Lattanzi, Mirrokni, Rastogi, Vassilvitskii, "Connected Components in
 MapReduce and Beyond", SoCC 2014) — the shuffle-native formulation:
-every round is a groupBy(node) + join, converges in O(log^2 n) rounds
-(2-4 in practice for near-dup graphs, whose components are shallow),
-and never materializes a component as a single task's worth of data.
-That is the property that matters at 100 TB: label-propagation needs
-diameter rounds (a pathological dup-chain makes that O(n)), and a
-driver-side union-find needs all edges on one machine; star
-contraction needs neither.
+it converges in O(log^2 n) rounds (2-4 in practice for near-dup
+graphs, whose components are shallow), and never collects the edge
+set to the driver.  That is the property that matters at 100 TB:
+label-propagation needs diameter rounds (a pathological dup-chain
+makes that O(n)), and a driver-side union-find needs all edges on one
+machine; star contraction needs neither.
+
+Round shape: each star is ONE window aggregate over ONE exchange on
+the node key (large-star: min neighbour per node over both edge
+directions; small-star: min smaller neighbour per node, both emitted
+edges from one explode), then the small-star's dropDuplicates — three
+exchanges per round, and the round's convergence signature is
+observed on the eager checkpoint that materializes it (no separate
+aggregate job).  Trade-off: a window keeps a node's whole
+neighbourhood in one task, so a hub node of degree d — including the
+root of a component that has contracted to a star — is one task
+sorting d rows, where a groupBy (partial min) + join shape lets AQE's
+skew-join handling split the hub's join across tasks.  Near-dup
+components are small, so the saved exchanges win; a graph with
+million-degree hubs is where the window's single task becomes the
+straggler.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
+from pyspark.sql import DataFrame, Observation, functions as F
 
+
+# The round bodies are rendered as SQL text: every Column-API node
+# costs py4j round-trips, and the contraction rebuilds the same
+# expressions every round.  The parsed plans equal the Column-built
+# ones.
 
 def _canon(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Undirected edge set, canonical (hi > lo), self-loops dropped."""
-    e = edges.select(F.col(src).cast("long").alias("a"),
-                     F.col(dst).cast("long").alias("b"))
-    e = e.filter(F.col("a").isNotNull() & F.col("b").isNotNull()
-                 & (F.col("a") != F.col("b")))
-    return e.select(F.greatest("a", "b").alias("hi"),
-                    F.least("a", "b").alias("lo")).dropDuplicates()
+    return (edges.select(F.col(src).cast("long").alias("a"),
+                         F.col(dst).cast("long").alias("b"))
+            .where("a IS NOT NULL AND b IS NOT NULL AND a != b")
+            .selectExpr("greatest(a, b) AS hi", "least(a, b) AS lo")
+            .dropDuplicates())
 
 
 def _large_star(e: DataFrame) -> DataFrame:
     # directed both ways; for each u: m = min(neighbors ∪ {u}); connect
     # every LARGER neighbor v to m.  (v > u >= m, so output is canonical
-    # and self-loop-free by construction.)
-    d = e.select(F.col("hi").alias("u"), F.col("lo").alias("v")).union(
-        e.select(F.col("lo").alias("u"), F.col("hi").alias("v")))
-    m = d.groupBy("u").agg(F.least(F.min("v"), F.col("u")).alias("m"))
-    # no dropDuplicates here: the only consumer is _small_star, whose
-    # aggregates are duplicate-insensitive (min) and whose own output
-    # dedup bounds the round — skipping it saves one shuffle per round
-    # at the cost of ≤deg(u) transient duplicate edges in the join.
-    return (d.join(m, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("hi"), F.col("m").alias("lo")))
+    # and self-loop-free by construction.)  The min is a window over
+    # partitionBy(u): one exchange, no aggregate-then-join-back.
+    # No dropDuplicates here: the only consumer is _small_star, whose
+    # window min is duplicate-insensitive and whose own output dedup
+    # bounds the round — ≤deg(u) transient duplicate edges instead of
+    # one more shuffle per round.
+    return (e.selectExpr("hi AS u", "lo AS v")
+            .union(e.selectExpr("lo AS u", "hi AS v"))
+            .selectExpr("u", "v", "least(min(v) OVER (PARTITION BY u), u) AS m")
+            .where("v > u")
+            .selectExpr("v AS hi", "m AS lo"))
 
 
 def _small_star(e: DataFrame) -> DataFrame:
     # canonical (hi, lo) already points large → small; for each hi:
     # m = min of its smaller neighbors; connect hi and every non-min
-    # smaller neighbor to m.
-    m = e.groupBy("hi").agg(F.min("lo").alias("m"))
-    moved = (e.join(m, "hi")
-             .filter(F.col("lo") != F.col("m"))
-             .select(F.col("lo").alias("hi"), F.col("m").alias("lo")))
-    root = m.select(F.col("hi"), F.col("m").alias("lo"))
-    return moved.union(root).dropDuplicates()
+    # smaller neighbor to m.  Both emitted edges come from one explode
+    # over the window's rows (hi > lo >= m, so only lo can equal m).
+    return (e.selectExpr("hi", "lo", "min(lo) OVER (PARTITION BY hi) AS m")
+            .selectExpr("explode(array(hi, lo)) AS node", "m")
+            .where("node != m")
+            .selectExpr("node AS hi", "m AS lo")
+            .dropDuplicates())
+
+
+def _checkpoint(e: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
+    """Eager local checkpoint of an edge set, plus its signature
+    (count, bit_xor(xxhash64(hi, lo))) observed on the checkpoint's own
+    job — no second aggregate job.  bit_xor is order-free and
+    overflow-free under ANSI mode (a sum() of xxhash64 values throws
+    ARITHMETIC_OVERFLOW); edges are distinct post-dropDuplicates, so
+    xor-cancellation of repeated rows cannot happen."""
+    obs = Observation()
+    cp = e.observe(obs, F.expr("count(1) AS n"),
+                   F.expr("coalesce(bit_xor(xxhash64(hi, lo)), 0) AS h")
+                   ).localCheckpoint(eager=True)
+    r = obs.get
+    return cp, (r["n"], r["h"])
 
 
 def _union_find_components(e: DataFrame) -> DataFrame:
@@ -115,48 +147,38 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     singleton components left-join and coalesce to the node id (see
     duplicate_clusters).
 
-    Scale shape: each round is one groupBy + one join on node ids (no
-    component ever gathers into a single task); lineage is cut with an
-    eager localCheckpoint per round so the plan stays O(1) deep across
-    iterations — on a real cluster with fault-tolerance requirements,
-    point SparkContext.setCheckpointDir at durable storage and swap
-    localCheckpoint for checkpoint.  Convergence is checked with a
-    single count+hash aggregate per round (edge sets are compared by
-    (count, sum(xxhash64)) — no driver-side edge materialization).
+    Scale shape: each round is a large-star and a small-star, each one
+    window min over one exchange on the node key, then the small-star's
+    dropDuplicates — three exchanges per round, no aggregate joined
+    back.  Lineage is cut with an eager localCheckpoint per round so
+    the plan stays O(1) deep across iterations — on a real cluster with
+    fault-tolerance requirements, point SparkContext.setCheckpointDir
+    at durable storage and swap localCheckpoint for checkpoint.
+    Convergence compares edge sets by (count, bit_xor(xxhash64)),
+    observed on the checkpoint job itself (pyspark.sql.Observation):
+    no extra job, no driver-side edge materialization.  Hub skew: the
+    window puts a node's whole neighbourhood in one task (see the
+    module docstring) — the price of the saved exchanges.
 
     ``small_graph_max_edges``: edge sets at or below this count (the
-    count the convergence probe already fetched) skip the contraction
-    for an exact driver-side union-find with IDENTICAL labels — the
-    round-trip latency of even one contraction round dwarfs a
-    megabyte collect.  0/None disables the fast path.
+    count observed on the canonical-edge checkpoint) skip the
+    contraction for an exact driver-side union-find with IDENTICAL
+    labels — the round-trip latency of even one contraction round
+    dwarfs a megabyte collect.  0/None disables the fast path.
     """
-    def sig(df: DataFrame) -> tuple[int, int]:
-        # bit_xor: order-free and overflow-free under ANSI mode (a
-        # sum() of xxhash64 values throws ARITHMETIC_OVERFLOW); edges
-        # are distinct post-dropDuplicates so xor-cancellation of
-        # repeated rows cannot happen.  The checkpoint is LAZY and this
-        # aggregate is the action that materializes it — one job per
-        # round, not two.
-        r = df.agg(F.count("*").alias("n"),
-                   F.coalesce(F.expr("bit_xor(xxhash64(hi, lo))"),
-                              F.lit(0)).alias("h")).first()
-        return (r["n"], r["h"])
-
-    e = _canon(edges, src, dst).localCheckpoint(eager=False)
-    prev = sig(e)
+    e, prev = _checkpoint(_canon(edges, src, dst))
     if prev[0] == 0:
-        return e.select(F.col("hi").alias("node"), F.col("lo").alias("component"))
+        return e.selectExpr("hi AS node", "lo AS component")
     # small-graph fast path: the edge COUNT is already on the driver
-    # (the sig() convergence probe), so the gate is free.  Near-dup
+    # (observed on the checkpoint), so the gate is free.  Near-dup
     # graphs at test scale are hundreds of edges; the contraction's
     # per-round job latency dominates below ~10^5 edges on any
     # cluster.  Pass small_graph_max_edges=0 to force the distributed
-    # path (the equivalence test does).
+    # path (the equivalence tests do).
     if small_graph_max_edges and prev[0] <= small_graph_max_edges:
         return _union_find_components(e)
     for _ in range(max_iter):
-        e2 = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        cur = sig(e2)
+        e2, cur = _checkpoint(_small_star(_large_star(e)))
         e.unpersist()
         e = e2
         if cur == prev:
@@ -167,9 +189,8 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
             f"connected_components did not converge in {max_iter} rounds")
     # fixed point of small-star is a star forest: every edge is
     # (member, root); roots appear only on the lo side.
-    members = e.select(F.col("hi").alias("node"), F.col("lo").alias("component"))
-    roots = e.select(F.col("lo").alias("node"),
-                     F.col("lo").alias("component")).dropDuplicates()
+    members = e.selectExpr("hi AS node", "lo AS component")
+    roots = e.selectExpr("lo AS node", "lo AS component").dropDuplicates()
     return members.union(roots)
 
 

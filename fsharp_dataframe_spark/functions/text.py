@@ -220,20 +220,6 @@ def domain_stats(df: DataFrame, text_col: str = "text",
                  F.count("*").alias("n_urls")))
 
 
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Convenience: attach the standard text-analysis columns."""
-    c = F.col(text_col)
-    return df.withColumns({
-        "n_tokens": token_count(c),
-        "n_chars_calc": char_count(c),
-        "punct_ratio": F.round(punct_ratio(c), 4),
-        "stopword_ratio": F.round(stopword_ratio(c), 4),
-        "quality": quality_score(c),
-        "lang_pred": lang_id(c),
-        "fingerprint": fingerprint(c),
-    })
-
-
 def vocab_topk(df: DataFrame, k: int = 50, text_col: str = "text",
                id_col: str = "doc_id", min_count: int = 1) -> DataFrame:
     """Corpus vocabulary top-k: the k most frequent (lowercased,

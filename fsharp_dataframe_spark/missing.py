@@ -46,7 +46,3 @@ def canonicalize_missing(df: DataFrame, columns: list[str] | None = None) -> Dat
         return df
     return df.withColumns({c: nan_to_null(F.col(c)) for c in floating})
 
-
-def is_missing(col: Column) -> Column:
-    """Predicate matching the reference's isNA (NULL; NaN pre-normalization)."""
-    return col.isNull() | F.isnan(col)

@@ -37,11 +37,6 @@ from fsharp_dataframe_spark.series import Series
 _BUCKET = "__bucket"
 
 
-def _last_value_agg(s: Series) -> Column:
-    """Default chunk aggregate: last value by key order (`Series.lastValue`)."""
-    return F.max_by(s.value, s.key)
-
-
 def resample_equiv(s: Series, proj: Callable[[Column], Column],
                    agg: Callable[[Column], Column]) -> Series:
     """Group an ordered series by a key projection — `resampleEquiv`

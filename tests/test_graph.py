@@ -7,8 +7,8 @@ scale.
 
 import random
 
-import pytest
-from pyspark.sql import functions as F
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
 from fsharp_dataframe_spark.functions.graph import (
     connected_components, duplicate_clusters,
@@ -147,3 +147,56 @@ def test_cc_distributed_and_union_find_paths_agree(spark):
             for r in connected_components(
                 df, small_graph_max_edges=0).collect()}
     assert fast == dist and fast
+
+
+# Scale-path property: the star contraction (forced with
+# small_graph_max_edges=0) against the union-find above on adversarial
+# edge lists.  Derandomized like tests/test_properties.py.
+SETTINGS = dict(max_examples=8, deadline=None, derandomize=True,
+                suppress_health_check=[HealthCheck.function_scoped_fixture])
+
+LONG_MAX = 2**63 - 1
+IDS = st.one_of(st.integers(-40, 40),
+                st.integers(LONG_MAX - 20, LONG_MAX),
+                st.integers(-LONG_MAX - 1, -LONG_MAX + 20))
+
+
+@st.composite
+def adversarial_edges(draw):
+    """A chain, a hub star and random extras over one node set, then
+    repeated and reversed copies, self-loops and NULL endpoints."""
+    nodes = draw(st.lists(IDS, max_size=40, unique=True))
+    cut = draw(st.integers(0, len(nodes)))
+    chain, rest = nodes[:cut], nodes[cut:]
+    edges = list(zip(chain, chain[1:]))
+    edges += [(rest[0], leaf) for leaf in rest[1:]]
+    if nodes:
+        pick = st.sampled_from(nodes)
+        edges += draw(st.lists(st.tuples(pick, pick), max_size=8))
+    if edges:
+        copies = draw(st.lists(st.sampled_from(edges), max_size=6))
+        edges += copies + [(b, a) for a, b in copies]
+    edges += draw(st.lists(st.tuples(st.none() | IDS, st.none()), max_size=2))
+    return draw(st.permutations(edges))
+
+
+def _zigzag_chain(n):
+    # ids alternate far/near so no star step can shortcut the chain
+    ids = [i if i % 2 else LONG_MAX - i for i in range(n)]
+    return list(zip(ids, ids[1:]))
+
+
+@given(edges=adversarial_edges())
+@example(edges=[])
+@example(edges=[(None, None), (5, 5), (7, None)])
+@example(edges=_zigzag_chain(64))
+@example(edges=[(0, leaf) for leaf in range(1, 80)]
+         + [(LONG_MAX, -LONG_MAX - 1), (-LONG_MAX - 1, LONG_MAX)])
+@settings(**SETTINGS)
+def test_cc_scale_path_matches_union_find(spark, edges):
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {r["node"]: r["component"]
+           for r in connected_components(df, small_graph_max_edges=0).collect()}
+    exp = _union_find([(a, b) for a, b in edges
+                       if a is not None and b is not None and a != b])
+    assert got == exp

@@ -2,6 +2,8 @@
 promises must be visible in the executed plans, not just fast today.
 Plus the whole-group pandas lambda path (§2.11)."""
 
+import re
+
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -487,3 +489,45 @@ def test_tpch_q3_plan_broadcasts_and_heap_selects(spark):
     assert "TakeOrderedAndProject" in plan
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
+
+
+def _tokenizer_nodes(plan):
+    # distinct plan nodes that run the word_shingles tokenizer; a cached
+    # relation's plan prints once per scan but as the SAME text
+    return {re.sub(r"^[\s:|+*-]*", "", line) for line in plan.splitlines()
+            if "array_distinct(transform(" in line}
+
+
+def test_cc_round_has_at_most_three_exchanges(spark):
+    # one star-contraction round = large-star window + small-star
+    # window + the small-star dropDuplicates; an aggregate joined back
+    # onto its input would add exchanges here
+    from fsharp_dataframe_spark.functions.graph import (
+        _canon, _large_star, _small_star,
+    )
+
+    edges = spark.createDataFrame([(1, 2), (2, 3), (5, 4)], "src long, dst long")
+    e = _canon(edges, "src", "dst").localCheckpoint()
+    plan = (_small_star(_large_star(e))
+            ._jdf.queryExecution().executedPlan().toString())
+    assert len(re.findall(r"\bExchange\b", plan)) <= 3, plan
+
+
+def test_ngram_jaccard_has_no_size_aggregate_or_size_joins(spark):
+    # set sizes ride on the exploded rows: the shingle self-join is the
+    # plan's only join, and nothing aggregates per document
+    plan = _plan(spark, "ngram_jaccard")
+    assert len(re.findall(r"(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)",
+                          plan)) == 1, plan
+    assert not re.search(r"HashAggregate\(keys=\[doc_id#\d+L?\]", plan), plan
+
+
+def test_near_dedup_tokenizes_once(spark):
+    # one persisted (doc_id, _sh) relation feeds the MinHash explode and
+    # both verify probes: a single tokenizing projection, and every
+    # explode reads the cached array instead of re-tokenizing
+    plan = _plan(spark, "near_dedup")
+    nodes = _tokenizer_nodes(plan)
+    assert len(nodes) == 1 and next(iter(nodes)).startswith("Project"), nodes
+    explodes = re.findall(r"Generate explode\((\w+)#", plan)
+    assert explodes and set(explodes) == {"_sh"}, explodes

@@ -418,9 +418,8 @@ def test_ivf_index_round_trip_and_partition_pruning(spark, tmp_path):
 
 
 def test_broadcast_and_join_verify_paths_agree(spark):
-    """r16 verify-then-dedup: the broadcast verify (no candidate dedup
-    exchange, searchsorted id lookup) must return exactly the join
-    path's rows — self and directional cascades both, including on a
+    """The broadcast verify (candidates deduped before it,
+    searchsorted id lookup) must return exactly the join path's rows — self and directional cascades both, including on a
     corpus with NULL/ragged vectors."""
     from fsharp_dataframe_spark.functions.similarity import (
         cosine_near_dup_pairs, cosine_pairs_exact,
