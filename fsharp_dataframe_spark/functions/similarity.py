@@ -5,14 +5,44 @@
   codegen), TakeOrderedAndProject for the top-k.  O(N·d) per query —
   fine for batch scoring; at 100 TB use the bucketed variants.
 - **LSH-bucketed (random hyperplanes)** — deterministic pseudo-random
-  hyperplanes from xxhash64; candidates share a bucket in at least one
+  hyperplanes from sha256; candidates share a bucket in at least one
   table.  Sub-linear probes at the cost of recall.
 - **IVF-style (coarse quantizer)** — assign every vector to its nearest
   of n_cells sampled centroids (one broadcast join); query probes the
   closest cells only.
+- **Near-duplicate and k-NN tiers** — cosine_pairs_exact,
+  knn_join_exact, cosine_near_dup_pairs and cross_cosine_near_dup_pairs
+  generate candidates their own way and score them with one core
+  (below).
 
-All operators avoid Python UDFs: dot products are `F.zip_with` +
-`F.aggregate` over the arrays.
+dot, norm, cosine, lsh_bucket and ivf_assign are Column expressions.
+dot_batch, lsh_buckets_all and random_projection are Arrow-batched
+pandas UDFs, and the broadcast scorers run in mapInPandas: Spark
+interprets higher-order functions row by row, never in codegen.  Every
+numpy fold adds v_k·w_k in dimension order, the left-to-right IEEE
+order of dot()'s F.aggregate, so both give the same doubles.
+
+Scoring contract of the four tiers, on both sides of the size gate:
+
+- vectors have one dim: the ``dim`` argument, else the length of the
+  first non-NULL vector (0 when there is none, and then nothing
+  scores);
+- ids are unique within each side; the broadcast path raises
+  ValueError on a duplicate;
+- a NULL, ragged (size ≠ dim) or zero-norm vector never scores, and a
+  NULL id never pairs;
+- a cosine is rounded once, by F.round(·, 4) on the JVM side, and
+  the threshold or top-k is applied to the rounded value.
+
+The size gate (_fits_broadcast) takes the broadcast path when the
+n·dim doubles of the vector matrix fit ``broadcast_budget_bytes`` and
+every id column is integral.  The matrix is then collected once
+(_vector_matrix, via Arrow) and shipped to the workers, which score
+blocks of it against itself in numpy (exact tiers) or score the bare
+candidate id pairs (bucketed tiers).  Otherwise the join path attaches
+each vector to its pairs and scores them with dot_batch (_pair_cosine).
+Workers return every row within _SLACK of the cut unrounded; the JVM
+rounds and cuts.
 """
 
 from __future__ import annotations
@@ -21,6 +51,7 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -37,7 +68,8 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    """NULL, not a division error, when either vector has zero norm."""
+    return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
 def brute_force_topk(df: DataFrame, query_vec: list[float], k: int = 10,
@@ -54,7 +86,7 @@ def brute_force_topk(df: DataFrame, query_vec: list[float], k: int = 10,
     scored = df.select(
         F.col(id_col),
         F.round(cosine(F.col(vec_col), q), 4).alias("cosine_sim"),
-    )
+    ).where(F.col("cosine_sim").isNotNull())
     return scored.orderBy(F.col("cosine_sim").desc(), F.col(id_col)).limit(k)
 
 
@@ -139,9 +171,8 @@ def lsh_buckets_all(vec: Column, dim: int, n_bits: int, n_tables: int) -> Column
         # bucket array instead — posexplode then skips them, matching
         # the old per-bit Column expression's NULL propagation
         ok = [i for i in range(n) if vals[i] is not None and len(vals[i]) == dim]
-        res = pd.Series([None] * n, dtype=object)
         if not ok:
-            return res
+            return pd.Series([None] * n, dtype=object)
         m = np.stack([vals[i] for i in ok]).astype(np.float64)
         sims = np.zeros((m.shape[0], planes.shape[1]))
         for k in range(dim):  # fold order identical to dot()'s aggregate
@@ -150,11 +181,19 @@ def lsh_buckets_all(vec: Column, dim: int, n_bits: int, n_tables: int) -> Column
         out = np.zeros((m.shape[0], n_tables), dtype=np.int64)
         for t in range(n_tables):  # integer sums: order-free, exact
             out[:, t] = bits[:, t * n_bits:(t + 1) * n_bits] @ weights
-        for row, i in enumerate(ok):
-            res.iloc[i] = out[row]
-        return res
+        return _scatter_rows(n, ok, out)
 
     return f(vec)
+
+
+def _scatter_rows(n: int, ok: list[int], out) -> pd.Series:
+    """An n-row object Series holding row r of ``out`` at position
+    ``ok[r]`` and NULL elsewhere.  Element-wise assignment keeps a
+    one-column row an array (``Series.iloc[i] = row`` unpacks it)."""
+    res = [None] * n
+    for row, i in enumerate(ok):
+        res[i] = out[row]
+    return pd.Series(res, dtype=object)
 
 
 def _py_bucket(vec: list[float], dim: int, n_bits: int, seed: int) -> int:
@@ -339,6 +378,161 @@ def kmeans_fit(df: DataFrame, k: int = 8, dim: int | None = None,
     return cents
 
 
+# ---------------------------------------------------------------- scoring core
+# The contract and the size gate are described in the module docstring.
+
+_INTEGRAL_IDS = (ByteType, ShortType, IntegerType, LongType)
+# Worker pre-filter margin: F.round(·, 4) moves a value by at most
+# 0.5e-4, so a row further than this below a cut can never round onto it.
+_SLACK = 1e-3
+# Bound on one block's score matrix (block rows × n doubles) per task.
+_BLOCK_BYTES = 64 << 20
+
+
+def _fits_broadcast(n: int | None, dim: int, budget: int, *id_types) -> bool:
+    """The size gate.  ``n`` None (unknown) and a zero budget take the
+    join path."""
+    return (n is not None and 0 < budget and n * dim * 8 <= budget
+            and all(isinstance(t, _INTEGRAL_IDS) for t in id_types))
+
+
+def _infer_dim(df: DataFrame, vec_col: str) -> int:
+    """Length of the first non-NULL vector, 0 when there is none."""
+    row = df.where(F.col(vec_col).isNotNull()).select(F.size(vec_col)).first()
+    return row[0] if row is not None else 0
+
+
+def _may_score(id_col: str, vec_col: str, dim: int) -> Column:
+    """The rows both paths score: a non-NULL id and a vector of ``dim``
+    elements.  Zero norms pass here; each path drops them itself.  SQL
+    text: one py4j call, where the Column form costs ~50."""
+    return F.expr(f"`{id_col}` IS NOT NULL AND size(`{vec_col}`) = {dim}")
+
+
+def _labels(label_col: str | None) -> list[Column]:
+    return [F.col(label_col).cast("string").alias("_lb")] if label_col else []
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str, dim: int,
+             label_col: str | None = None) -> DataFrame:
+    """Join-path side: (id, _v, _n[, _lb]) of the rows that may score;
+    _pair_cosine makes a zero norm NULL.  The norm is computed once per
+    vector, not once per pair (measured 110 s -> 33 s for the 2000×64
+    pair join)."""
+    return df.where(_may_score(id_col, vec_col, dim)).select(
+        F.col(id_col), F.col(vec_col).alias("_v"),
+        norm(F.col(vec_col)).alias("_n"), *_labels(label_col))
+
+
+def _pair_cosine(a: str, b: str) -> Column:
+    """Join-path cosine of the (…, _v, _n) relations aliased ``a`` and
+    ``b``: dot_batch over the precomputed norms, NULL on a zero norm."""
+    return F.try_divide(dot_batch(F.col(f"{a}._v"), F.col(f"{b}._v")),
+                        F.col(f"{a}._n") * F.col(f"{b}._n"))
+
+
+def _vector_matrix(df: DataFrame, id_col: str, vec_col: str, dim: int,
+                   label_col: str | None = None):
+    """Broadcast-path side: (ids, mat, norms, labels) of the rows that
+    may score and have a non-zero norm, sorted by id, so workers look
+    ids up with np.searchsorted.  Norms use norm()'s fold order.  Labels
+    are int codes, -1 for NULL (None without ``label_col``)."""
+    import numpy as np
+
+    t = (df.where(_may_score(id_col, vec_col, dim))
+         .select(F.col(id_col).cast("long"), vec_col, *_labels(label_col))
+         .toArrow())
+    ids = t.column(0).to_numpy()
+    mat = (t.column(1).combine_chunks().flatten()
+           .to_numpy(zero_copy_only=False).astype(np.float64)
+           .reshape(len(ids), dim))
+    acc = np.zeros(len(ids))
+    for d in range(dim):
+        acc += mat[:, d] * mat[:, d]
+    norms = np.sqrt(acc)
+    labels = pd.factorize(t.column(2).to_pandas())[0] if label_col else None
+    keep = np.nonzero(norms > 0)[0]
+    order = keep[np.argsort(ids[keep], kind="stable")]
+    ids = ids[order]
+    dup = ids[1:][ids[1:] == ids[:-1]]
+    if len(dup):
+        raise ValueError(f"{id_col} {dup[0]} appears more than once; "
+                         "ids must be unique")
+    return (ids, mat[order], norms[order],
+            labels[order] if label_col else None)
+
+
+def _score_blocks(spark, side, emit, schema: str) -> DataFrame:
+    """Worker block scorer: ship ``side`` (a _vector_matrix) once and
+    score blocks of its rows against all of it.  ``emit(rows, S, side)``
+    turns the unrounded cosines S of matrix rows ``rows`` into an output
+    frame of ``schema``."""
+    n = len(side[0])
+    step = max(1, min(256, _BLOCK_BYTES // (8 * max(n, 1))))
+    bvar = spark.sparkContext.broadcast(side)
+
+    def score(batches):
+        import numpy as np
+
+        _, mat, norms, _ = bvar.value
+        for pdf in batches:
+            pos = pdf["id"].to_numpy()
+            for lo in range(0, len(pos), step):
+                rows = pos[lo:lo + step]
+                A = mat[rows]
+                S = np.zeros((len(rows), n))
+                for d in range(mat.shape[1]):  # dot_batch's fold order
+                    S += A[:, d][:, None] * mat[:, d][None, :]
+                S /= norms[rows][:, None] * norms[None, :]
+                yield emit(rows, S, bvar.value)
+
+    parallelism = spark.sparkContext.defaultParallelism
+    return spark.range(n, numPartitions=parallelism).mapInPandas(score, schema)
+
+
+def _all_pairs(df: DataFrame, id_col: str, vec_col: str, dim: int,
+               label_col: str | None = None) -> DataFrame:
+    """Join path of the exact tiers: (id_a, id_b, cosine_sim) for every
+    id_a < id_b, and differing labels with ``label_col``."""
+    # the nested-loop pair join parallelizes over LEFT partitions; a
+    # small parquet read is 1 partition -> 1 task for the whole O(n²)
+    # verify unless we spread it
+    a = (_vectors(df, id_col, vec_col, dim, label_col)
+         .repartition(df.sparkSession.sparkContext.defaultParallelism)
+         .alias("a"))
+    b = _vectors(df, id_col, vec_col, dim, label_col).alias("b")
+    cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    if label_col:
+        cond = cond & (F.col("a._lb") != F.col("b._lb"))
+    return a.join(b, cond).select(F.col(f"a.{id_col}").alias("id_a"),
+                                  F.col(f"b.{id_col}").alias("id_b"),
+                                  _pair_cosine("a", "b").alias("cosine_sim"))
+
+
+def _at_least(scored: DataFrame, threshold: float, a_type, b_type) -> DataFrame:
+    """Threshold finisher: round, keep cosine_sim >= threshold, cast the
+    two id columns back to the input types."""
+    a, b = scored.columns[:2]
+    return (scored.selectExpr(f"CAST(`{a}` AS {a_type.simpleString()}) AS `{a}`",
+                              f"CAST(`{b}` AS {b_type.simpleString()}) AS `{b}`",
+                              "round(cosine_sim, 4) AS cosine_sim")
+            .where(F.col("cosine_sim") >= threshold))
+
+
+def _top_k(scored: DataFrame, k: int, id_col: str, id_type) -> DataFrame:
+    """k-NN finisher over (id_a, id_b, cosine_sim): round, then keep the
+    k best per id_a by (sim desc, id_b asc)."""
+    w = Window.partitionBy("id_a").orderBy(F.col("cosine_sim").desc(),
+                                           F.col("id_b"))
+    return (scored.withColumn("cosine_sim", F.round("cosine_sim", 4))
+            .where(F.col("cosine_sim").isNotNull())
+            .withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") <= k)
+            .select(F.col("id_a").cast(id_type).alias(id_col),
+                    F.col("id_b").cast(id_type).alias("nbr_id"),
+                    "cosine_sim"))
+
+
 def cosine_pairs_exact(df: DataFrame, threshold: float = 0.9,
                        id_col: str = "vec_id", vec_col: str = "embedding",
                        dim: int | None = None,
@@ -348,101 +542,32 @@ def cosine_pairs_exact(df: DataFrame, threshold: float = 0.9,
     threshold).  Quadratic — the small-N verification tier; at scale
     use cosine_near_dup_pairs (bucketed candidates, same verify).
 
-    Size-gated like knn_join_exact: when the vector matrix fits
-    ``broadcast_budget_bytes`` (and ids are integral), it is shipped
-    once and each partition scores its query rows against the whole
-    matrix in one narrow Arrow pass — the former nested-loop pair join
-    shipped every (va, vb) pair through Arrow (2·dim doubles × n²/2
-    pairs, ~2 GB at 2000×64) just to run the same dot products.  The
-    block fold is dim-ordered exactly like dot_batch, and the worker
-    emits UNROUNDED sims past a conservative threshold−1e-3 margin so
-    the authoritative F.round >= threshold filter still runs JVM-side
-    — results bit-identical to the join path (pinned in
-    tests/test_similarity.py).  Past the gate (or with non-integral
-    ids) the pair-join path below runs unchanged."""
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
+    Size-gated (module docstring): the broadcast path scores the whole
+    matrix against itself in worker blocks — no pair ever crosses the
+    Python boundary with its vectors; the join path is a nested-loop
+    pair join."""
     if dim is None:
-        row = df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
-        dim = len(row[0]) if row is not None else 0
+        dim = _infer_dim(df, vec_col)
     if n_vectors is None:
         n_vectors = df.count()
     id_type = df.schema[id_col].dataType
-    integral_id = isinstance(id_type, (ByteType, ShortType, IntegerType, LongType))
-    if integral_id and dim and n_vectors * dim * 8 <= broadcast_budget_bytes:
+    if not _fits_broadcast(n_vectors, dim, broadcast_budget_bytes, id_type):
+        return _at_least(_all_pairs(df, id_col, vec_col, dim), threshold,
+                         id_type, id_type)
+
+    def emit(rows, S, side):
         import numpy as np
 
-        bvar = df.sparkSession.sparkContext.broadcast(
-            _vector_matrix(df, id_col, vec_col, dim))
-        min_keep = threshold - 1e-3
+        # ids are sorted and unique: column j > row position <=> id_a < id_b
+        upper = np.arange(S.shape[1])[None, :] > rows[:, None]
+        r, c = np.nonzero(upper & (S >= threshold - _SLACK))
+        return pd.DataFrame({"id_a": side[0][rows[r]], "id_b": side[0][c],
+                             "cosine_sim": S[r, c]})
 
-        def _pairs(batches):
-            import pandas as pd
-
-            b_ids, b_mat, b_norms = bvar.value
-            for pdf in batches:
-                out_a, out_b, out_s = [], [], []
-                q_ids = pdf[id_col].to_numpy()
-                for lo in range(0, len(pdf), 256):
-                    blk = pdf.iloc[lo:lo + 256]
-                    ok = [i for i, v in enumerate(blk[vec_col])
-                          if v is not None and len(v) == dim]
-                    if not ok or len(b_ids) == 0:
-                        continue
-                    A = np.stack([np.asarray(blk[vec_col].iloc[i],
-                                             dtype=np.float64) for i in ok])
-                    qi = q_ids[lo:lo + len(blk)][ok]
-                    qacc = np.zeros(len(ok))
-                    S = np.zeros((len(ok), len(b_ids)))
-                    for d in range(dim):  # dot_batch's fold order
-                        qacc = qacc + A[:, d] * A[:, d]
-                        S = S + A[:, d][:, None] * b_mat[:, d][None, :]
-                    with np.errstate(invalid="ignore", divide="ignore"):
-                        S = S / (np.sqrt(qacc)[:, None] * b_norms[None, :])
-                    for row, qid in enumerate(qi):
-                        s = S[row]
-                        # id_a < id_b: each unordered pair is emitted
-                        # exactly once, by its smaller-id query row
-                        keep = np.nonzero((b_ids > qid) & ~np.isnan(s)
-                                          & (s >= min_keep))[0]
-                        out_a.extend([qid] * len(keep))
-                        out_b.extend(b_ids[keep])
-                        out_s.extend(s[keep])
-                yield pd.DataFrame({
-                    "id_a": np.asarray(out_a, dtype=np.int64),
-                    "id_b": np.asarray(out_b, dtype=np.int64),
-                    "cosine_sim": np.asarray(out_s, dtype=np.float64)})
-
-        from fsharp_dataframe_spark.functions.util import spread
-
-        scored = spread(df.select(F.col(id_col).cast("long").alias(id_col),
-                                  vec_col)).mapInPandas(
-            _pairs, "id_a long, id_b long, cosine_sim double")
-        return (scored.withColumn("cosine_sim", F.round("cosine_sim", 4))
-                .filter(F.col("cosine_sim") >= threshold)
-                .select(F.col("id_a").cast(id_type).alias("id_a"),
-                        F.col("id_b").cast(id_type).alias("id_b"),
-                        "cosine_sim"))
-
-    # norms precomputed ONCE per vector (n rows), not once per pair —
-    # dot/(na*nb) is IEEE-identical to cosine() (same fold, same op
-    # order) but drops the per-pair aggregate passes from 3 to 1
-    # (measured 110s -> 33s at 2000×64 before the repartition below)
-    a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"),
-                  norm(F.col(vec_col)).alias("_na"))
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"),
-                  norm(F.col(vec_col)).alias("_nb"))
-    # the nested-loop pair join parallelizes over LEFT partitions; a
-    # small parquet read is 1 partition -> 1 task for the whole O(n²)
-    # verify unless we spread it
-    a = a.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    pairs = a.join(b, F.col("id_a") < F.col("id_b"))
-    sim = dot_batch(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
-    return (
-        pairs.withColumn("cosine_sim", F.round(sim, 4))
-        .filter(F.col("cosine_sim") >= threshold)
-        .select("id_a", "id_b", "cosine_sim")
-    )
+    scored = _score_blocks(df.sparkSession,
+                           _vector_matrix(df, id_col, vec_col, dim), emit,
+                           "id_a long, id_b long, cosine_sim double")
+    return _at_least(scored, threshold, id_type, id_type)
 
 
 def knn_join_exact(df: DataFrame, k: int = 5,
@@ -455,137 +580,47 @@ def knn_join_exact(df: DataFrame, k: int = 5,
     (brute_force_topk).  Returns (vec_id, nbr_id, cosine_sim), k rows
     per vector, ordered deterministically (rounded sim desc, nbr id
     asc — ties at the k boundary resolve by id on both engines).
+    ``neq_label_col``: neighbors must carry a different, non-NULL label.
 
-    Size-gated like cosine_near_dup_pairs' verify: when the vector
-    matrix fits ``broadcast_budget_bytes`` (and ids are integral), it
-    is shipped once and each partition scores its query rows against
-    the whole matrix in ONE narrow Arrow pass — no n² pair join, no
-    window shuffle; the n²·dim flops run vectorized with the SAME
-    dim-ordered IEEE fold as dot_batch, so the rounded sims are
-    bit-identical to the join path's (measured 9.3s → sub-second at
-    2000×64).  Past the gate (or with non-integral ids) it falls back
-    to pair-join + per-vector window; at corpus scale use ivf_knn_join
-    (cell-blocked candidates, same rescore).  Broadcast path: rows
-    with NULL/ragged/zero-norm vectors emit no neighbor rows and are
-    never neighbors (the join path drops them via NULL propagation
-    the same way)."""
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-    dim = dim or len(df.select(vec_col).first()[0])
+    Size-gated (module docstring).  Broadcast path: one narrow Arrow
+    pass scores worker blocks against the shipped matrix and returns,
+    per vector, every candidate within _SLACK of its k-th best unrounded
+    cosine — a superset of the answer, since rounding moves a value by
+    at most 0.5e-4.  Join path: pair join, each pair scored once and
+    mirrored.  Both end in the same rounded top-k window.  At corpus
+    scale use ivf_knn_join (cell-blocked candidates, same rescore)."""
+    if dim is None:
+        dim = _infer_dim(df, vec_col)
     if n_vectors is None:
         n_vectors = df.count()
     id_type = df.schema[id_col].dataType
-    integral_id = isinstance(id_type, (ByteType, ShortType, IntegerType, LongType))
-    if integral_id and n_vectors * dim * 8 <= broadcast_budget_bytes:
+    if not _fits_broadcast(n_vectors, dim, broadcast_budget_bytes, id_type):
+        half = _all_pairs(df, id_col, vec_col, dim, neq_label_col)
+        both = half.unionByName(half.select(
+            F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"),
+            "cosine_sim"))
+        return _top_k(both, k, id_col, id_type)
+
+    def emit(rows, S, side):
         import numpy as np
 
-        label_sel = ([F.col(neq_label_col).cast("string").alias("_lb")]
-                     if neq_label_col else [])
-        rows = [r for r in df.select(F.col(id_col).cast("long").alias("_id"),
-                                     vec_col, *label_sel).collect()
-                if r[0] is not None and r[1] is not None and len(r[1]) == dim]
-        b_ids = np.array([r[0] for r in rows], dtype=np.int64)
-        b_labels = (np.array([r[2] for r in rows], dtype=object)
-                    if neq_label_col else None)
-        mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows]) \
-            if rows else np.zeros((0, dim))
-        acc = np.zeros(len(rows))
-        for d in range(dim):
-            acc = acc + mat[:, d] * mat[:, d]
-        norms = np.sqrt(acc)
-        bvar = df.sparkSession.sparkContext.broadcast(
-            (b_ids, mat, norms, b_labels))
+        ids, _, _, labels = side
+        n = len(ids)
+        ok = np.arange(n)[None, :] != rows[:, None]
+        if labels is not None:
+            q = labels[rows][:, None]
+            ok &= (labels[None, :] != q) & (labels[None, :] >= 0) & (q >= 0)
+        S = np.where(ok, S, -np.inf)
+        kk = min(k, n)
+        kth = np.partition(S, n - kk, axis=1)[:, n - kk][:, None]
+        r, c = np.nonzero(ok & (S >= kth - _SLACK))
+        return pd.DataFrame({"id_a": ids[rows[r]], "id_b": ids[c],
+                             "cosine_sim": S[r, c]})
 
-        def _knn(batches):
-            ids_all, m_all, n_all, lb_all = bvar.value
-            for pdf in batches:
-                out_q, out_n, out_s = [], [], []
-                q_ids = pdf[id_col].to_numpy()
-                q_lbs = (pdf["_lb"].to_numpy(dtype=object)
-                         if lb_all is not None else None)
-                for lo in range(0, len(pdf), 256):
-                    blk = pdf.iloc[lo:lo + 256]
-                    ok = [i for i, v in enumerate(blk[vec_col])
-                          if v is not None and len(v) == dim]
-                    if not ok or len(ids_all) == 0:
-                        continue
-                    A = np.stack([np.asarray(blk[vec_col].iloc[i],
-                                             dtype=np.float64) for i in ok])
-                    qi = q_ids[lo:lo + len(blk)][ok]
-                    ql = (q_lbs[lo:lo + len(blk)][ok]
-                          if lb_all is not None else None)
-                    qacc = np.zeros(len(ok))
-                    S = np.zeros((len(ok), len(ids_all)))
-                    for d in range(dim):
-                        qacc = qacc + A[:, d] * A[:, d]
-                        S = S + A[:, d][:, None] * m_all[:, d][None, :]
-                    with np.errstate(invalid="ignore", divide="ignore"):
-                        S = S / (np.sqrt(qacc)[:, None] * n_all[None, :])
-                    # HALF-UP (away from zero) like F.round / DuckDB
-                    # round — np.round is banker's and can differ at
-                    # .00005 boundaries, where the tiebreak order and
-                    # the oracle's values both depend on the rounding
-                    S = np.sign(S) * np.floor(np.abs(S) * 1e4 + 0.5) / 1e4
-                    for row, qid in enumerate(qi):
-                        s = S[row]
-                        mask = (ids_all != qid) & ~np.isnan(s)
-                        if lb_all is not None:
-                            # SQL != : NULL on either side never matches
-                            qlb = ql[row]
-                            if qlb is None:
-                                continue
-                            mask &= np.array(
-                                [l is not None and l != qlb
-                                 for l in lb_all], dtype=bool)
-                        cand = np.nonzero(mask)[0]
-                        if len(cand) == 0:
-                            continue
-                        order = cand[np.lexsort((ids_all[cand], -s[cand]))][:k]
-                        out_q.extend([qid] * len(order))
-                        out_n.extend(ids_all[order])
-                        out_s.extend(s[order])
-                import pandas as pd  # noqa: F811
-
-                yield pd.DataFrame({id_col: np.asarray(out_q, dtype=np.int64),
-                                    "nbr_id": np.asarray(out_n, dtype=np.int64),
-                                    "cosine_sim": np.asarray(out_s)})
-
-        from fsharp_dataframe_spark.functions.util import spread
-
-        scored = spread(df.select(F.col(id_col).cast("long").alias(id_col),
-                                  vec_col, *label_sel)).mapInPandas(
-            _knn, f"{id_col} long, nbr_id long, cosine_sim double")
-        return scored.select(F.col(id_col).cast(id_type).alias(id_col),
-                             F.col("nbr_id").cast(id_type).alias("nbr_id"),
-                             "cosine_sim")
-
-    lbl_a = ([F.col(neq_label_col).cast("string").alias("_la")]
-             if neq_label_col else [])
-    lbl_b = ([F.col(neq_label_col).cast("string").alias("_lb")]
-             if neq_label_col else [])
-    a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"),
-                  norm(F.col(vec_col)).alias("_na"), *lbl_a)
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"),
-                  norm(F.col(vec_col)).alias("_nb"), *lbl_b)
-    a = a.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    cond = F.col("id_a") < F.col("id_b")
-    if neq_label_col:
-        # symmetric predicate, so the mirrored half inherits it
-        cond = cond & (F.col("_la") != F.col("_lb"))
-    pairs = a.join(b, cond)
-    sim = dot_batch(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
-    half = (pairs.withColumn("cosine_sim", F.round(sim, 4))
-            .select("id_a", "id_b", "cosine_sim"))
-    both = half.unionByName(half.select(
-        F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"),
-        "cosine_sim"))
-    w = Window.partitionBy("id_a").orderBy(F.col("cosine_sim").desc(),
-                                           F.col("id_b").asc())
-    return (both.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .filter(F.col("cosine_sim").isNotNull())
-            .select(F.col("id_a").alias(id_col),
-                    F.col("id_b").alias("nbr_id"), "cosine_sim"))
+    side = _vector_matrix(df, id_col, vec_col, dim, neq_label_col)
+    scored = _score_blocks(df.sparkSession, side, emit,
+                           "id_a long, id_b long, cosine_sim double")
+    return _top_k(scored, k, id_col, id_type)
 
 
 def ivf_knn_join(df: DataFrame, centroids: list[list[float]], k: int = 5,
@@ -621,40 +656,28 @@ def ivf_knn_join(df: DataFrame, centroids: list[list[float]], k: int = 5,
     from fsharp_dataframe_spark.functions.util import lit_double_matrix
 
     cents = lit_double_matrix(centroids)
-    sims = F.transform(cents, lambda c: cosine(F.col(vec_col), c))
+    v = _vectors(df, id_col, vec_col, len(centroids[0]), neq_label_col)
+    sims = F.transform(cents, lambda c: cosine(F.col("_v"), c))
     # top-n_probe cells per vector (probe list), exploded to (vector,
     # probe_cell) rows; the data side is the same vectors keyed by
-    # their OWN cell — join on cell id blocks the candidate space
+    # their OWN cell — join on cell id blocks the candidate space.  A
+    # vector's probe cells are distinct and each vector has one cell,
+    # so with unique ids every pair meets once.
     idx = F.sequence(F.lit(0), F.lit(len(centroids) - 1))
     order = F.array_sort(
         F.zip_with(sims, idx,
                    lambda s, i: F.struct((-s).alias("neg"), i.alias("cell"))))
     probes = F.slice(F.transform(order, lambda st: st["cell"]), 1, n_probe)
-    lbl_a = ([F.col(neq_label_col).cast("string").alias("_la")]
-             if neq_label_col else [])
-    q = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"),
-                  norm(F.col(vec_col)).alias("_na"), *lbl_a,
-                  F.explode(probes).alias("_cell"))
-    d_base = ivf_assign(df, centroids, vec_col)
-    lbl_b = ([F.col(neq_label_col).cast("string").alias("_lb")]
-             if neq_label_col else [])
-    d = d_base.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"),
-        norm(F.col(vec_col)).alias("_nb"), *lbl_b,
-        F.col("ivf_cell").alias("_cell"))
-    cand = (q.join(d, on="_cell")
-            .filter(F.col("id_a") != F.col("id_b"))
-            .dropDuplicates(["id_a", "id_b"]))
+    q = v.select("*", F.explode(probes).alias("_cell")).alias("a")
+    d = ivf_assign(v, centroids, "_v").alias("b")
+    cond = ((F.col("a._cell") == F.col("b.ivf_cell"))
+            & (F.col(f"a.{id_col}") != F.col(f"b.{id_col}")))
     if neq_label_col:
-        cand = cand.filter(F.col("_la") != F.col("_lb"))
-    sim = dot_batch(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
-    scored = cand.withColumn("cosine_sim", F.round(sim, 4))
-    w = Window.partitionBy("id_a").orderBy(F.col("cosine_sim").desc(),
-                                           F.col("id_b").asc())
-    return (scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .select(F.col("id_a").alias(id_col),
-                    F.col("id_b").alias("nbr_id"), "cosine_sim"))
+        cond = cond & (F.col("a._lb") != F.col("b._lb"))
+    scored = q.join(d, cond).select(
+        F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"),
+        _pair_cosine("a", "b").alias("cosine_sim"))
+    return _top_k(scored, k, id_col, df.schema[id_col].dataType)
 
 
 def dot_batch(a: Column, b: Column) -> Column:
@@ -726,30 +749,6 @@ def lsh_params_for(threshold: float, n_vectors: int, target_recall: float = 0.9,
     return n_bits, min(n_tables, 64)
 
 
-def _vector_matrix(df: DataFrame, id_col: str, vec_col: str, dim: int):
-    """Driver-collected (ids, mat, norms) for the broadcast verify,
-    sorted by id so the worker-side lookup is one np.searchsorted
-    instead of a per-row Python dict probe.  Only valid rows survive
-    (non-NULL id, non-NULL vector of the right length) — absent ids
-    score NaN downstream, matching the join path's NULL propagation.
-    Norms use the same left-to-right fold as norm()/dot_batch so every
-    downstream cosine is bit-identical to the join path."""
-    import numpy as np
-
-    rows = [r for r in df.select(F.col(id_col).cast("long").alias("_id"),
-                                 vec_col).collect()
-            if r[0] is not None and r[1] is not None and len(r[1]) == dim]
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows]) \
-        if rows else np.zeros((0, dim))
-    acc = np.zeros(len(rows))
-    for k_ in range(dim):
-        acc = acc + mat[:, k_] * mat[:, k_]
-    norms = np.sqrt(acc)
-    order = np.argsort(ids, kind="stable")
-    return ids[order], mat[order], norms[order]
-
-
 def _np_id_lookup(sorted_ids, col):
     """Vectorized id → row-position lookup (-1 when absent).  The old
     pandas ``.map(dict)`` probe hashed every id through the Python
@@ -764,47 +763,35 @@ def _np_id_lookup(sorted_ids, col):
     return np.where(sorted_ids[j] == col, j, -1)
 
 
-def _make_pair_verify(bvar, min_keep: float | None = None):
-    """mapInPandas verifier over broadcast (side_a, side_b) matrices:
-    scores column-0 × column-1 id pairs with the exact dot/(na·nb)
-    fold of dot_batch (bit-identical cosines).  Pairs whose id is
-    absent from its side (NULL/ragged source vectors) score NaN and
-    fall to the caller's >= threshold filter.
+def _make_pair_verify(bvar, min_keep: float):
+    """mapInPandas verifier over broadcast (side_a, side_b) matrices
+    (_vector_matrix): scores column-0 × column-1 id pairs with the
+    dot/(na·nb) fold of dot_batch.  A pair whose id is absent from its
+    side (a vector that never scores) is dropped.
 
     ``min_keep`` is a CONSERVATIVE worker-side pre-filter: candidates
     score below the caller's threshold in the vast majority (they
     merely shared a bucket), and returning them across the Python
     boundary just to be dropped by the JVM-side filter costs ~1 µs/row
     (guide §4.1 — the boundary, not the math, is the expensive part).
-    Callers pass threshold − 1e-3: any row whose EXACT F.round(sim, 4)
-    could reach the threshold lies within 0.5e-4 of it, so the margin
-    can never drop a qualifying row, and the authoritative
-    round-then-filter still runs JVM-side on the survivors."""
+    Callers pass threshold − _SLACK; the authoritative round-then-filter
+    still runs JVM-side on the survivors."""
 
     def _verify(batches):
         import numpy as np
 
-        (ids_a, mat_a, norms_a), (ids_b, mat_b, norms_b) = bvar.value
+        (ids_a, mat_a, norms_a, _), (ids_b, mat_b, norms_b, _) = bvar.value
         for pdf in batches:
-            ca, cb = pdf.columns[0], pdf.columns[1]
-            if len(ids_a) == 0 or len(ids_b) == 0:
-                pdf["cosine_sim"] = np.nan
-                yield pdf.iloc[0:0] if min_keep is not None else pdf
-                continue
-            ia = _np_id_lookup(ids_a, pdf[ca].to_numpy())
-            ib = _np_id_lookup(ids_b, pdf[cb].to_numpy())
-            ok = (ia >= 0) & (ib >= 0)
+            ia = _np_id_lookup(ids_a, pdf.iloc[:, 0].to_numpy())
+            ib = _np_id_lookup(ids_b, pdf.iloc[:, 1].to_numpy())
+            found = (ia >= 0) & (ib >= 0)
+            pdf, ia, ib = pdf[found], ia[found], ib[found]
             va, vb = mat_a[ia], mat_b[ib]
             s = np.zeros(len(pdf))
-            for k_ in range(va.shape[1]):  # dot_batch's fold order
-                s = s + va[:, k_] * vb[:, k_]
-            with np.errstate(invalid="ignore", divide="ignore"):
-                s = s / (norms_a[ia] * norms_b[ib])
-            pdf["cosine_sim"] = np.where(ok, s, np.nan)
-            if min_keep is not None:
-                yield pdf[ok & (s >= min_keep)]
-            else:
-                yield pdf
+            for d in range(va.shape[1]):  # dot_batch's fold order
+                s += va[:, d] * vb[:, d]
+            s /= norms_a[ia] * norms_b[ib]
+            yield pdf.assign(cosine_sim=s)[s >= min_keep]
 
     return _verify
 
@@ -820,30 +807,18 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float = 0.9, dim: int | None
     exact cosine verifies.  Like the MinHash cascade, no all-pairs join
     ever touches the corpus; the shuffle keys are (table, bucket).
 
-    Verification strategy is size-gated like a broadcast join: when the
-    whole vector matrix fits ``broadcast_budget_bytes`` (n_vectors × dim
-    × 8), it is shipped to the workers once and the candidate pairs flow
-    through verification as BARE (id_a, id_b) rows — 16 bytes/pair over
-    the wire instead of 2·dim doubles/pair (measured 60×, and candidate
-    sets are orders of magnitude larger than the corpus whenever LSH
-    parameters admit generous candidates).  Past the gate it falls back
-    to attaching vectors by id join — O(pairs) shuffle, the only shape
-    that works when the matrix itself is cluster-sized.  Both paths
-    produce bit-identical cosines (same left-to-right IEEE fold as
-    dot()/dot_batch).
-
-    The broadcast path additionally requires an INTEGRAL id column (its
-    worker-side lookup table is keyed on int64); string/decimal ids take
-    the join path regardless of size, and the broadcast path casts its
-    ids back to the input dtype so both paths return identical
-    schemas."""
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-    dim = dim or len(df.select(vec_col).first()[0])
+    Size-gated (module docstring).  On the broadcast path the candidate
+    pairs reach the verify as BARE (id_a, id_b) rows — 16 bytes/pair
+    over the wire instead of 2·dim doubles/pair (measured 60×, and
+    candidate sets are orders of magnitude larger than the corpus
+    whenever LSH parameters admit generous candidates).  The join path
+    attaches vectors by id join — O(pairs) shuffle, the only shape that
+    works when the matrix itself is cluster-sized."""
+    if dim is None:
+        dim = _infer_dim(df, vec_col)
     if n_vectors is None:
         n_vectors = df.count()
     id_type = df.schema[id_col].dataType
-    integral_id = isinstance(id_type, (ByteType, ShortType, IntegerType, LongType))
     # candidate phase is NARROW — (id, tbl, bucket) only.  Carrying the
     # vector payload through the bucket join + dedup shuffles
     # O(candidates × dim) bytes; deduping bare id pairs first shuffles
@@ -892,37 +867,35 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float = 0.9, dim: int | None
     # the boundary crossing, not the shuffle, is the expensive part —
     # guide §4.1).
     cand_ids = cand_raw.dropDuplicates(["id_a", "id_b"])
-    if integral_id and n_vectors * dim * 8 <= broadcast_budget_bytes:
-        side = _vector_matrix(df, id_col, vec_col, dim)
-        bvar = df.sparkSession.sparkContext.broadcast((side, side))
-        scored = cand_ids.select(F.col("id_a").cast("long"),
-                                 F.col("id_b").cast("long")).mapInPandas(
-            _make_pair_verify(bvar, min_keep=threshold - 1e-3),
-            "id_a long, id_b long, cosine_sim double")
-        return (scored.withColumn("cosine_sim", F.round("cosine_sim", 4))
-                .filter(F.col("cosine_sim") >= threshold)
-                .select(F.col("id_a").cast(id_type).alias("id_a"),
-                        F.col("id_b").cast(id_type).alias("id_b"),
-                        "cosine_sim"))
+    return _verify_candidates(cand_ids, df, df, id_col, vec_col, dim,
+                              threshold, n_vectors, broadcast_budget_bytes)
 
-    vecs = df.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"),
-                     norm(F.col(vec_col)).alias("_n"))
-    cands = (
-        cand_ids
-        .join(vecs.select(F.col("_vid").alias("id_a"), F.col("_v").alias("_va"),
-                          F.col("_n").alias("_na")), on="id_a")
-        .join(vecs.select(F.col("_vid").alias("id_b"), F.col("_v").alias("_vb"),
-                          F.col("_n").alias("_nb")), on="id_b")
-    )
-    # dot/(na*nb): IEEE-identical to the exact tier's value (same fold
-    # and op order); the Arrow-batched dot because candidates number in
-    # the millions and the Column HOF chain is interpreted
-    sim = dot_batch(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
-    return (
-        cands.withColumn("cosine_sim", F.round(sim, 4))
-        .filter(F.col("cosine_sim") >= threshold)
-        .select("id_a", "id_b", "cosine_sim")
-    )
+
+def _verify_candidates(cand: DataFrame, left: DataFrame, right: DataFrame,
+                       id_col: str, vec_col: str, dim: int, threshold: float,
+                       n: int | None, budget: int) -> DataFrame:
+    """The bucketed tiers' verify: score deduped candidate id pairs
+    (column 0 from ``left``, column 1 from ``right``) on the side of the
+    size gate that ``n`` vectors take, then the threshold finisher."""
+    a, b = cand.columns
+    a_type = left.schema[id_col].dataType
+    b_type = right.schema[id_col].dataType
+    if _fits_broadcast(n, dim, budget, a_type, b_type):
+        side_a = _vector_matrix(left, id_col, vec_col, dim)
+        side_b = (side_a if right is left
+                  else _vector_matrix(right, id_col, vec_col, dim))
+        bvar = cand.sparkSession.sparkContext.broadcast((side_a, side_b))
+        scored = cand.select(F.col(a).cast("long"),
+                             F.col(b).cast("long")).mapInPandas(
+            _make_pair_verify(bvar, threshold - _SLACK),
+            f"{a} long, {b} long, cosine_sim double")
+    else:
+        lv = _vectors(left, id_col, vec_col, dim).alias("l")
+        rv = _vectors(right, id_col, vec_col, dim).alias("r")
+        scored = (cand.join(lv, F.col(a) == F.col(f"l.{id_col}"))
+                  .join(rv, F.col(b) == F.col(f"r.{id_col}"))
+                  .select(a, b, _pair_cosine("l", "r").alias("cosine_sim")))
+    return _at_least(scored, threshold, a_type, b_type)
 
 
 def cosine_bucket_table(df: DataFrame, dim: int | None = None,
@@ -939,13 +912,11 @@ def cosine_bucket_table(df: DataFrame, dim: int | None = None,
     lsh_buckets_all, so a table built yesterday collides with a batch
     hashed today."""
     if dim is None:
-        row = (df.select(vec_col)
-               .filter(F.col(vec_col).isNotNull()).first())
-        if row is None:
+        dim = _infer_dim(df, vec_col)
+        if not dim:
             raise ValueError(
                 "cosine_bucket_table: cannot infer dim from an empty "
                 "or all-NULL vector column — pass dim explicitly")
-        dim = len(row[0])
     return df.select(
         F.col(id_col),
         F.posexplode(lsh_buckets_all(F.col(vec_col), dim, n_bits,
@@ -976,27 +947,16 @@ def cross_cosine_near_dup_pairs(new: DataFrame, existing: DataFrame,
     re-hashing the landed corpus entirely; the ``existing`` frame then
     only serves vector lookups for the |new|-bounded candidate set.
 
-    Verification is the join path of cosine_near_dup_pairs (attach
-    each side's vector by id, Arrow-batched dot, one rounding) —
-    candidates here are |new|-bounded, so the id joins are O(pairs)
-    and AQE broadcasts the batch side.  Scores are IEEE-identical to
-    the exact tier (same fold and op order), so at total-recall LSH
-    sizing the exact directional SQL is the oracle.
+    Verification is cosine_near_dup_pairs', size-gated (module
+    docstring) on ``total_vectors`` — new + existing, which the caller
+    knows from catalog stats; left unset, the join path runs, whose id
+    joins are O(pairs) because candidates are |new|-bounded.  dim is
+    inferred from ``new``; an empty batch returns a typed-empty result.
 
     Reference anchor for the directional alignment discipline:
     src/JoinHelpers.fs:42-53 (restrict-to-range before joining)."""
     if dim is None:
-        row = (new.select(vec_col)
-               .filter(F.col(vec_col).isNotNull()).first())
-        if row is None:
-            # an EMPTY nightly batch is routine, not an error — the
-            # result is typed-empty (new_id, old_id, cosine_sim)
-            return (new.limit(0)
-                    .select(F.col(id_col).alias("new_id"))
-                    .crossJoin(existing.limit(0)
-                               .select(F.col(id_col).alias("old_id")))
-                    .withColumn("cosine_sim", F.lit(0.0)))
-        dim = len(row[0])
+        dim = _infer_dim(new, vec_col)
     from fsharp_dataframe_spark.functions.util import pin_group_parallelism
 
     # pinned on the join key for the same reason as the self path: the
@@ -1011,54 +971,13 @@ def cross_cosine_near_dup_pairs(new: DataFrame, existing: DataFrame,
         else cosine_bucket_table(existing, dim, n_bits, n_tables,
                                  id_col, vec_col),
         ["tbl", "bucket"])
-    cand_raw = (nb.alias("n").join(eb.alias("e"), on=["tbl", "bucket"])
-                .select(F.col(f"n.{id_col}").alias("new_id"),
-                        F.col(f"e.{id_col}").alias("old_id")))
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-    new_id_type = new.schema[id_col].dataType
-    old_id_type = existing.schema[id_col].dataType
-    integral = all(isinstance(t, (ByteType, ShortType, IntegerType, LongType))
-                   for t in (new_id_type, old_id_type))
-    cand = cand_raw.dropDuplicates(["new_id", "old_id"])
-    if (total_vectors is not None and integral
-            and total_vectors * dim * 8 <= broadcast_budget_bytes):
-        # r16 size-gated broadcast verify, the directional twin of
-        # cosine_near_dup_pairs': when both sides' vector matrices fit
-        # the broadcast budget (``total_vectors`` counts new +
-        # existing — the caller knows it from catalog stats), the
-        # deduped candidates flow into a worker-side numpy verify —
-        # 16 bytes/pair over the wire instead of the two per-side
-        # vector attach joins shipping 2·dim doubles per pair.  The
-        # numpy fold is dot_batch's, so cosines are bit-identical to
-        # the join path below; absent ids (NULL/ragged vectors) score
-        # NaN and drop at the filter exactly as the inner joins drop
-        # them.  Callers that cannot bound the corpus leave
-        # ``total_vectors`` unset and keep the O(pairs) join shape.
-        bvar = new.sparkSession.sparkContext.broadcast(
-            (_vector_matrix(new, id_col, vec_col, dim),
-             _vector_matrix(existing, id_col, vec_col, dim)))
-        scored = cand.select(F.col("new_id").cast("long"),
-                             F.col("old_id").cast("long")).mapInPandas(
-            _make_pair_verify(bvar, min_keep=threshold - 1e-3),
-            "new_id long, old_id long, cosine_sim double")
-        return (scored.withColumn("cosine_sim", F.round("cosine_sim", 4))
-                .filter(F.col("cosine_sim") >= threshold)
-                .select(F.col("new_id").cast(new_id_type).alias("new_id"),
-                        F.col("old_id").cast(old_id_type).alias("old_id"),
-                        "cosine_sim"))
-    nv = new.select(F.col(id_col).alias("new_id"),
-                    F.col(vec_col).alias("_va"),
-                    norm(F.col(vec_col)).alias("_na"))
-    ev = existing.select(F.col(id_col).alias("old_id"),
-                         F.col(vec_col).alias("_vb"),
-                         norm(F.col(vec_col)).alias("_nb"))
-    sim = dot_batch(F.col("_va"), F.col("_vb")) / (F.col("_na")
-                                                   * F.col("_nb"))
-    return (cand.join(nv, on="new_id").join(ev, on="old_id")
-            .withColumn("cosine_sim", F.round(sim, 4))
-            .filter(F.col("cosine_sim") >= threshold)
-            .select("new_id", "old_id", "cosine_sim"))
+    cand = (nb.alias("n").join(eb.alias("e"), on=["tbl", "bucket"])
+            .select(F.col(f"n.{id_col}").alias("new_id"),
+                    F.col(f"e.{id_col}").alias("old_id"))
+            .dropDuplicates(["new_id", "old_id"]))
+    return _verify_candidates(cand, new, existing, id_col, vec_col, dim,
+                              threshold, total_vectors,
+                              broadcast_budget_bytes)
 
 
 def _py_cosine(a: list[float], b: list[float]) -> float:
@@ -1191,12 +1110,13 @@ def semantic_dedup(df: DataFrame, centroids: list[list[float]],
             F.col(vec_col).alias("_v"), norm(F.col(vec_col)).alias("_n"),
             "ivf_cell"))
     l, r = asg.alias("l"), asg.alias("r")
-    sim = dot_batch(F.col("l._v"), F.col("r._v")) / (F.col("l._n") * F.col("r._n"))
-    pairs = (l.join(r, (F.col("l.ivf_cell") == F.col("r.ivf_cell"))
-                    & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")))
-             .filter(F.round(sim, 4) >= threshold)
-             .select(F.col(f"l.{id_col}").alias("id_a"),
-                     F.col(f"r.{id_col}").alias("id_b")))
+    scored = (l.join(r, (F.col("l.ivf_cell") == F.col("r.ivf_cell"))
+                     & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")))
+              .select(F.col(f"l.{id_col}").alias("id_a"),
+                      F.col(f"r.{id_col}").alias("id_b"),
+                      _pair_cosine("l", "r").alias("cosine_sim")))
+    long_id = asg.schema[id_col].dataType
+    pairs = _at_least(scored, threshold, long_id, long_id).select("id_a", "id_b")
     out = duplicate_clusters(asg.select(id_col), pairs, id_col=id_col)
     cells = asg.select(id_col, F.col("ivf_cell").alias("sem_cell"))
     return out.join(cells, id_col).select(
@@ -1252,14 +1172,12 @@ def cross_semantic_dedup(new: DataFrame, existing: DataFrame,
           else semantic_assignment_table(existing, centroids, id_col,
                                          vec_col))
     n, e = na.alias("n"), ea.alias("e")
-    sim = dot_batch(F.col("n._v"), F.col("e._v")) / (F.col("n._n")
-                                                     * F.col("e._n"))
-    return (n.join(e, F.col("n.ivf_cell") == F.col("e.ivf_cell"))
-            .withColumn("cosine_sim", F.round(sim, 4))
-            .filter(F.col("cosine_sim") >= threshold)
-            .select(F.col(f"n.{id_col}").alias("new_id"),
-                    F.col(f"e.{id_col}").alias("old_id"),
-                    "cosine_sim"))
+    scored = (n.join(e, F.col("n.ivf_cell") == F.col("e.ivf_cell"))
+              .select(F.col(f"n.{id_col}").alias("new_id"),
+                      F.col(f"e.{id_col}").alias("old_id"),
+                      _pair_cosine("n", "e").alias("cosine_sim")))
+    return _at_least(scored, threshold, na.schema[id_col].dataType,
+                     ea.schema[id_col].dataType)
 
 
 def random_projection(df: DataFrame, out_dim: int, dim: int | None = None,
@@ -1289,7 +1207,8 @@ def random_projection(df: DataFrame, out_dim: int, dim: int | None = None,
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    dim = dim or len(df.select(vec_col).first()[0])
+    if dim is None:
+        dim = _infer_dim(df, vec_col)
     planes = np.array([_hyperplane_weights(seed, j, dim)
                        for j in range(out_dim)], dtype=np.float64).T
     scale = out_dim ** 0.5
@@ -1303,19 +1222,15 @@ def random_projection(df: DataFrame, out_dim: int, dim: int | None = None,
         vals = vs.to_numpy()
         ok = [i for i in range(n)
               if vals[i] is not None and len(vals[i]) == dim]
-        res = pd.Series([None] * n, dtype=object)
         if not ok:
-            return res
+            return pd.Series([None] * n, dtype=object)
         m = _np.stack([vals[i] for i in ok]).astype(_np.float64)
         out = _np.zeros((m.shape[0], planes.shape[1]))
         for k_ in range(dim):  # fold order identical to dot()'s aggregate
             out += m[:, k_:k_ + 1] * planes[k_:k_ + 1, :]
         # divide (not multiply-by-reciprocal): the SQL oracle writes
         # `/ sqrt(k)`, and x/s vs x*(1/s) differ in the last ulp
-        out = out / scale
-        for row, i in enumerate(ok):
-            res.iloc[i] = out[row]
-        return res
+        return _scatter_rows(n, ok, out / scale)
 
     return df.withColumn(out_col, f(F.col(vec_col)))
 

@@ -168,13 +168,15 @@ def test_ivf_train_assignment_never_shuffles_vectors(spark):
 
 def test_knn_join_broadcast_path_has_no_pair_join(spark):
     # under the broadcast budget the k-NN self-join is ONE narrow
-    # Arrow pass against the shipped matrix: no join operator, no
-    # per-vector window shuffle in the plan at all
+    # Arrow pass against the shipped matrix: no join operator.  Its
+    # one window is the rounded top-k finisher both paths share, over
+    # the worker's n·(k + near-ties) rows
     plan = _plan(spark, "knn_join")
     assert "MapInPandas" in plan
-    for op in ("SortMergeJoin", "BroadcastNestedLoopJoin",
-               "CartesianProduct", "Window"):
+    for op in ("SortMergeJoin", "BroadcastHashJoin",
+               "BroadcastNestedLoopJoin", "CartesianProduct"):
         assert op not in plan, op
+    assert plan.count("Window [") == 1
 
 
 def test_vocab_topk_is_take_ordered(spark):

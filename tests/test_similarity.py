@@ -11,6 +11,9 @@ and the uniform table gets a candidate-correctness check instead.
 import math
 import random
 
+import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from fsharp_dataframe_spark.sources.parquet import load_table
@@ -419,11 +422,11 @@ def test_ivf_index_round_trip_and_partition_pruning(spark, tmp_path):
 
 def test_broadcast_and_join_verify_paths_agree(spark):
     """The broadcast verify (candidates deduped before it,
-    searchsorted id lookup) must return exactly the join path's rows — self and directional cascades both, including on a
-    corpus with NULL/ragged vectors."""
+    searchsorted id lookup) must return exactly the join path's rows — self and directional cascades, the exact tier and the
+    k-NN self-join, including on a corpus with NULL/ragged vectors."""
     from fsharp_dataframe_spark.functions.similarity import (
         cosine_near_dup_pairs, cosine_pairs_exact,
-        cross_cosine_near_dup_pairs,
+        cross_cosine_near_dup_pairs, knn_join_exact,
     )
 
     df, _ = _clustered(spark, n_clusters=8, per_cluster=10)
@@ -453,3 +456,146 @@ def test_broadcast_and_join_verify_paths_agree(spark):
     ej = rows(cosine_pairs_exact(dirty, threshold=0.9,
                                  broadcast_budget_bytes=0))
     assert eb == ej and eb
+
+    kb = sorted(tuple(r) for r in knn_join_exact(dirty, k=3).collect())
+    kj = sorted(tuple(r) for r in knn_join_exact(
+        dirty, k=3, broadcast_budget_bytes=0).collect())
+    assert kb == kj and kb
+
+
+SETTINGS = dict(max_examples=8, deadline=None, derandomize=True,
+                suppress_health_check=[HealthCheck.function_scoped_fixture])
+
+# Near ties: the first three rows of _TIES point the same way; the
+# fourth is 1e-6 off, so its cosines differ from theirs unrounded but
+# round to the same 4 decimals.
+_TIES = [[1.0, 2.0, 2.0], [1.0, 2.0, 2.0], [2.0, 4.0, 4.0],
+         [1.0, 2.0, 2.000001], [0.0, 1.0, -1.0]]
+VECTORS = st.one_of(
+    st.sampled_from(_TIES),
+    st.lists(st.integers(-2, 2).map(float), min_size=3, max_size=3),
+    st.just([0.0, 0.0, 0.0]),          # zero norm
+    st.none(),
+    st.just([1.0, 1.0]),               # ragged, equal length
+)
+# (vector, label, in the new batch)
+CORPUS = st.lists(st.tuples(VECTORS, st.sampled_from([None, 0, 1]),
+                            st.booleans()), max_size=12)
+_ADVERSARIAL = ([(None, 0, True), ([0.0, 0.0, 0.0], 1, True),
+                 ([1.0, 1.0], 0, True), ([1.0, 1.0], 1, False)]
+                + [(v, i % 2 or None, i % 2 == 0)
+                   for i, v in enumerate(_TIES)]
+                + [([0.0, 0.0, 0.0], 0, False), ([1.0, -1.0, 0.0], 1, False)])
+
+
+def _ids(n, id_type):
+    # long ids straddle ±2^62 so a lossy cast or overflow would show
+    if id_type == "long":
+        return [(-1) ** i * (2 ** 62 - i) for i in range(n)]
+    return [7 * i - 20 for i in range(n)]
+
+
+# every example runs eight Spark queries, so fewer generated examples
+# than SETTINGS; the explicit ones hold every adversarial case
+@given(corpus=CORPUS, id_type=st.sampled_from(["int", "long"]))
+@example(corpus=_ADVERSARIAL, id_type="long")
+@example(corpus=[], id_type="int")
+@settings(**{**SETTINGS, "max_examples": 3})
+def test_broadcast_path_equals_join_path(spark, corpus, id_type):
+    """Both sides of the size gate return the same rows for all four
+    gated tiers, under the session's ANSI default: zero-norm, NULL and
+    equal-length ragged vectors never score, empty sides give empty
+    results, rounding and the k-NN tiebreak agree at near ties, and
+    NULL labels never mine or serve (the label mask runs with long
+    ids)."""
+    from fsharp_dataframe_spark.functions.similarity import (
+        cosine_near_dup_pairs, cosine_pairs_exact,
+        cross_cosine_near_dup_pairs, knn_join_exact,
+    )
+
+    schema = f"vec_id {id_type}, embedding array<double>, label int"
+    rows = [(i, v, lb) for i, (v, lb, _) in
+            zip(_ids(len(corpus), id_type), corpus)]
+    is_new = [c[2] for c in corpus]
+    df = spark.createDataFrame(rows, schema)
+    new = spark.createDataFrame(
+        [r for r, f in zip(rows, is_new) if f], schema)
+    old = spark.createDataFrame(
+        [r for r, f in zip(rows, is_new) if not f], schema)
+
+    def same(fn, *args, **kw):
+        b = sorted(tuple(r) for r in fn(*args, **kw).collect())
+        kw.setdefault("broadcast_budget_bytes", 0)
+        kw.pop("total_vectors", None)
+        j = sorted(tuple(r) for r in fn(*args, **kw).collect())
+        assert b == j, (fn.__name__, b, j)
+
+    n = len(rows)
+    label = "label" if id_type == "long" else None
+    same(cosine_pairs_exact, df, threshold=0.5, n_vectors=n)
+    same(knn_join_exact, df, k=2, neq_label_col=label, n_vectors=n)
+    same(cosine_near_dup_pairs, df, threshold=0.5, n_bits=1, n_tables=1,
+         n_vectors=n)
+    same(cross_cosine_near_dup_pairs, new, old, threshold=0.5, dim=3,
+         n_bits=1, n_tables=2, total_vectors=n)
+
+
+def test_broadcast_path_rejects_duplicate_ids(spark):
+    from fsharp_dataframe_spark.functions.similarity import (
+        cosine_near_dup_pairs, cosine_pairs_exact,
+        cross_cosine_near_dup_pairs, knn_join_exact,
+    )
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.0, 1.0])],
+        "vec_id long, embedding array<double>")
+    for fn in (cosine_pairs_exact, knn_join_exact, cosine_near_dup_pairs):
+        with pytest.raises(ValueError, match="vec_id 1 appears more than once"):
+            fn(df)
+    with pytest.raises(ValueError, match="vec_id 1"):
+        cross_cosine_near_dup_pairs(df.limit(1), df, total_vectors=4)
+
+
+def test_zero_vector_never_in_topk(spark):
+    """cosine() is NULL, not DIVIDE_BY_ZERO under ANSI, for a zero
+    vector, and the single-query tiers never return it."""
+    from fsharp_dataframe_spark.functions.similarity import (
+        ivf_knn_join, ivf_topk,
+    )
+
+    df, rows = _clustered(spark, n_clusters=4, per_cluster=5)
+    dirty = df.unionByName(spark.createDataFrame(
+        [(999, -1, [0.0] * DIM)], "vec_id int, cluster int, embedding array<double>"))
+    q = rows[0][2]
+    cents = [rows[c * 5][2] for c in range(4)]
+    n = len(rows) + 1
+    assert ivf_assign(dirty, cents).where("vec_id = 999").first()["ivf_cell"] is None
+    for out in (brute_force_topk(dirty, q, k=n), lsh_topk(dirty, q, k=n),
+                ivf_topk(dirty, cents, q, k=n, n_probe=4)):
+        got = [r["vec_id"] for r in out.collect()]
+        assert got and 999 not in got
+    knn = ivf_knn_join(dirty, cents, k=n, n_probe=4).collect()
+    assert knn and all(999 not in (r["vec_id"], r["nbr_id"]) for r in knn)
+
+
+def test_single_table_lsh(spark):
+    """lsh_params_for sizes one table for small or tight inputs; one
+    table must bucket like table 0 of two, and the cascade must run."""
+    from fsharp_dataframe_spark.functions.similarity import (
+        cosine_near_dup_pairs, lsh_buckets_all, lsh_params_for,
+    )
+
+    df, _ = _clustered(spark, n_clusters=4, per_cluster=6)
+    one = df.select("vec_id", lsh_buckets_all(F.col("embedding"), DIM, 8, 1)
+                    .alias("b")).collect()
+    two = {r["vec_id"]: r["b"] for r in df.select(
+        "vec_id", lsh_buckets_all(F.col("embedding"), DIM, 8, 2)
+        .alias("b")).collect()}
+    assert all(list(r["b"]) == [two[r["vec_id"]][0]] for r in one)
+    assert lsh_params_for(0.99, 10, 0.5) == (1, 1)
+    assert lsh_params_for(0.95, 1000, 0.5) == (2, 1)
+    for n_bits, n_tables in (lsh_params_for(0.99, 10, 0.5),
+                             lsh_params_for(0.95, 1000, 0.5)):
+        out = cosine_near_dup_pairs(df, threshold=0.9, n_bits=n_bits,
+                                    n_tables=n_tables).collect()
+        assert out
