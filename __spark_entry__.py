@@ -6435,7 +6435,7 @@ def _all_oracle_sql() -> dict[str, str]:
         # banding, popcount, DISTINCT candidate windows, the
         # (id, id, delta) vote, dominant-offset row_number (ties to the
         # smaller offset), and the alignable-window coverage rule —
-        # all verbatim from multimodal._offset_vote_pairs (stride 1)
+        # all verbatim from multimodal._offset_vote_match (stride 1)
         "audio_stream_dedup": """
             WITH m AS (SELECT row_number() OVER () - 1 AS j
                        FROM documents),

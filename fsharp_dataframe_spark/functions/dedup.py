@@ -642,6 +642,19 @@ def piece_expr(col, off: int, w: int):
     return x if w >= 64 else x.bitwiseAND(F.lit((1 << w) - 1))
 
 
+def _piece_bands(df: DataFrame, keep_cols, max_hamming: int,
+                 bits: int = 64) -> DataFrame:
+    """``df``'s ``keep_cols`` and its ``sh`` sketch plus one row per
+    pigeonhole piece: (keep_cols…, sh, q, qv) with ``q`` the piece
+    index and ``qv`` its bits — the one banding projection under every
+    piece table and piece join (text/image, the media tiers, the
+    streams)."""
+    offs = pigeonhole_pieces(bits, max_hamming)
+    return df.select(*keep_cols, "sh", F.posexplode(F.array(*[
+        piece_expr(F.col("sh"), off, w) for off, w in offs
+    ])).alias("q", "qv"))
+
+
 def banded_hamming_pairs(sketches: DataFrame, id_col: str = "doc_id",
                          sketch_col: str = "sh",
                          max_hamming: int = 8,
@@ -659,7 +672,6 @@ def banded_hamming_pairs(sketches: DataFrame, id_col: str = "doc_id",
 
     Returns (id_a, id_b, hamming) with id_a < id_b.
     """
-    offs = pigeonhole_pieces(bits, max_hamming)
     from fsharp_dataframe_spark.functions.util import track_persist
 
     # (id, sh) is one long per row: materialize so both sides of the
@@ -668,12 +680,7 @@ def banded_hamming_pairs(sketches: DataFrame, id_col: str = "doc_id",
     sh = track_persist(sketches.select(F.col(id_col),
                                        F.col(sketch_col).alias("sh"))
                        .filter(F.col("sh").isNotNull()))
-    quarters = sh.select(
-        id_col, "sh",
-        F.posexplode(F.array(*[
-            piece_expr(F.col("sh"), off, w) for off, w in offs
-        ])).alias("q", "qv"),
-    )
+    quarters = _piece_bands(sh, [id_col], max_hamming, bits)
     l, r = quarters.alias("l"), quarters.alias("r")
     # Hamming filter BEFORE the pair dedup: the piece join emits every
     # bucket collision (7M rows at 5000 docs measured) and bit_count is
@@ -701,14 +708,10 @@ def hamming_piece_table(sketches: DataFrame, id_col: str = "doc_id",
     joins against the stored table without re-hashing or re-exploding
     the corpus.  Piece cuts are validated (pigeonhole_pieces) and the
     NULL sketches rows no decoder could produce are dropped."""
-    offs = pigeonhole_pieces(bits, max_hamming)
-    return (sketches.select(F.col(id_col),
-                            F.col(sketch_col).alias("sh"))
-            .filter(F.col("sh").isNotNull())
-            .select(id_col, "sh",
-                    F.posexplode(F.array(*[
-                        piece_expr(F.col("sh"), off, w) for off, w in offs
-                    ])).alias("q", "qv")))
+    return _piece_bands(sketches.select(F.col(id_col),
+                                        F.col(sketch_col).alias("sh"))
+                        .filter(F.col("sh").isNotNull()),
+                        [id_col], max_hamming, bits)
 
 
 def cross_banded_hamming_pairs(new: DataFrame, existing: DataFrame,

@@ -26,6 +26,7 @@ column (metadata keys only).
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -1285,50 +1286,12 @@ def video_near_dup(df: DataFrame, every_n: int = 2, max_hamming: int = 2,
     Returns (id_a, id_b, matched_frames, compared_frames) with
     compared = min(sampled_a, sampled_b).
 
-    100 TB shape: pixels never shuffle (hashes leave the decode pass
-    as 8-byte longs); candidates ride (frame, piece-index, piece-bits)
-    keys — uniform for hash-like sketches and never all-pairs; the
-    Hamming filter runs BEFORE the pair aggregate (the
-    banded_hamming_pairs discipline); the per-video sampled counts
-    are a dim-sized aggregate broadcast back into the pair rollup."""
-    from fsharp_dataframe_spark.functions.util import track_persist
-
-    pieces = track_persist(
-        video_frame_piece_table(df, every_n=every_n,
-                                max_hamming=max_hamming,
-                                payload_col=payload_col,
-                                id_col=id_col))
-    l, r = pieces.alias("l"), pieces.alias("r")
-    frame_pairs = (
-        l.join(r, (F.col("l.frame_idx") == F.col("r.frame_idx"))
-               & (F.col("l.q") == F.col("r.q"))
-               & (F.col("l.qv") == F.col("r.qv"))
-               & (F.col("l.vid") < F.col("r.vid")))
-        .select(F.col("l.vid").alias("id_a"),
-                F.col("r.vid").alias("id_b"),
-                F.col("l.frame_idx").alias("frame_idx"),
-                F.bit_count(F.col("l.sh").bitwiseXOR(F.col("r.sh")))
-                .alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b", "frame_idx"]))
-    matched = (frame_pairs.groupBy("id_a", "id_b")
-               .agg(F.count("*").alias("matched_frames")))
-    # r16: exactly max_hamming+1 piece rows per sampled frame (the
-    # pigeonhole posexplode), so count(*)/(max_hamming+1) replaces the
-    # former distinct-then-count's extra exchange (guide §2.4)
-    counts = (pieces.groupBy("vid")
-              .agg((F.count("*") / (max_hamming + 1)).cast("long")
-                   .alias("n_sampled")))
-    out = (matched
-           .join(counts.select(F.col("vid").alias("id_a"),
-                               F.col("n_sampled").alias("_na")), "id_a")
-           .join(counts.select(F.col("vid").alias("id_b"),
-                               F.col("n_sampled").alias("_nb")), "id_b")
-           .withColumn("compared_frames",
-                       F.least(F.col("_na"), F.col("_nb"))))
-    return (out.filter(F.col("matched_frames") * 2
-                       >= F.col("compared_frames"))
-            .select("id_a", "id_b", "matched_frames", "compared_frames"))
+    Scale shape: see _aligned_match."""
+    pieces = _landed_pieces(
+        partial(video_frame_piece_table, every_n=every_n,
+                max_hamming=max_hamming, payload_col=payload_col,
+                id_col=id_col), df, _VIDEO)
+    return _aligned_match(pieces, pieces, max_hamming, _SELF)
 
 
 def video_frame_piece_table(df: DataFrame, every_n: int = 2,
@@ -1343,9 +1306,7 @@ def video_frame_piece_table(df: DataFrame, every_n: int = 2,
     hamming_piece_table / cosine_bucket_table.  ``residues`` narrows
     the sampled grid to ``f ≡ r (mod every_n)`` (the residue-set
     matchers' decode-only-the-voting-grid path)."""
-    from fsharp_dataframe_spark.functions.dedup import (
-        piece_expr, pigeonhole_pieces,
-    )
+    from fsharp_dataframe_spark.functions.dedup import _piece_bands
 
     fh = (video_frame_hashes(df, every_n=every_n,
                              payload_col=payload_col, id_col=id_col,
@@ -1353,11 +1314,7 @@ def video_frame_piece_table(df: DataFrame, every_n: int = 2,
           .filter(F.col("decode_ok"))
           .select(F.col(id_col).alias("vid"), "frame_idx",
                   F.col("dhash").alias("sh")))
-    offs = pigeonhole_pieces(64, max_hamming)
-    return fh.select(
-        "vid", "frame_idx", "sh",
-        F.posexplode(F.array(*[piece_expr(F.col("sh"), o, w)
-                               for o, w in offs])).alias("q", "qv"))
+    return _piece_bands(fh, ["vid", "frame_idx"], max_hamming)
 
 
 def cross_video_near_dup(new: DataFrame, existing: DataFrame,
@@ -1383,52 +1340,13 @@ def cross_video_near_dup(new: DataFrame, existing: DataFrame,
     persisted video_frame_piece_table read back from parquet (the
     production shape — piece-partitioned storage makes the join
     piece-pruned); otherwise it is hashed in this pass."""
-    from fsharp_dataframe_spark.functions.util import track_persist
-
-    npc = track_persist(
-        video_frame_piece_table(new, every_n=every_n,
-                                max_hamming=max_hamming,
-                                payload_col=payload_col,
-                                id_col=id_col))
-    epc = (existing if existing_is_piece_table
-           else track_persist(video_frame_piece_table(
-               existing, every_n=every_n, max_hamming=max_hamming,
-               payload_col=payload_col, id_col=id_col)))
-    frame_pairs = (
-        npc.alias("n").join(
-            epc.alias("e"),
-            (F.col("n.frame_idx") == F.col("e.frame_idx"))
-            & (F.col("n.q") == F.col("e.q"))
-            & (F.col("n.qv") == F.col("e.qv")))
-        .select(F.col("n.vid").alias("new_id"),
-                F.col("e.vid").alias("old_id"),
-                F.col("n.frame_idx").alias("frame_idx"),
-                F.bit_count(F.col("n.sh").bitwiseXOR(F.col("e.sh")))
-                .alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["new_id", "old_id", "frame_idx"]))
-    matched = (frame_pairs.groupBy("new_id", "old_id")
-               .agg(F.count("*").alias("matched_frames")))
-    # r16: the builders emit exactly max_hamming+1 piece rows per
-    # sampled frame (pigeonhole posexplode over decode_ok rows), so the
-    # distinct-frame count is count(*)/(max_hamming+1) — one map-side-
-    # combining aggregate instead of distinct-then-count (guide §2.4)
-    _p = max_hamming + 1
-    n_cnt = (npc.groupBy("vid")
-             .agg((F.count("*") / _p).cast("long").alias("_na")))
-    e_cnt = (epc.groupBy("vid")
-             .agg((F.count("*") / _p).cast("long").alias("_nb")))
-    out = (matched
-           .join(n_cnt.select(F.col("vid").alias("new_id"), "_na"),
-                 "new_id")
-           .join(e_cnt.select(F.col("vid").alias("old_id"), "_nb"),
-                 "old_id")
-           .withColumn("compared_frames",
-                       F.least(F.col("_na"), F.col("_nb"))))
-    return (out.filter(F.col("matched_frames") * 2
-                       >= F.col("compared_frames"))
-            .select("new_id", "old_id", "matched_frames",
-                    "compared_frames"))
+    build = partial(video_frame_piece_table, every_n=every_n,
+                    max_hamming=max_hamming, payload_col=payload_col,
+                    id_col=id_col)
+    return _aligned_match(
+        _landed_pieces(build, new, _VIDEO),
+        _landed_pieces(build, existing, _VIDEO, existing_is_piece_table),
+        max_hamming, _CROSS)
 
 
 def _video_frame_pattern(i: int, f: int) -> int:
@@ -1586,76 +1504,197 @@ def _distinct_idx_counts(side: DataFrame, n_pieces: int | None,
             .agg(F.count("*").alias(alias)))
 
 
-def _offset_vote_pairs(left: DataFrame, right: DataFrame, stride: int,
+def _offset_vote_match(left: DataFrame, right: DataFrame, *, stride: int,
                        max_hamming: int, directional: bool,
-                       require_full_left: bool = False,
+                       containment: bool = False, residues=None,
                        n_pieces: int | None = None) -> DataFrame:
-    """Offset-voting rollup shared by the whole-stream audio and the
-    trim-tolerant video tiers: join per-position hashes on (piece,
-    piece-bits) WITHOUT the position key, vote on the position delta
-    per candidate pair, keep the dominant offset, and keep pairs whose
-    matches at that offset cover >= half the positions alignable at it
-    (2*matched >= comparable, exact integers).  This is what catches a
-    re-upload with a trimmed head — the first thing a real media
-    ingest pipeline meets — which the same-position matchers
-    (video_near_dup, banded first-window audio) provably miss.
+    """The one offset-voting matcher under the whole-stream audio,
+    trim-tolerant video and snippet-search tiers: join per-position
+    hashes on (piece, piece-bits) WITHOUT the position key, vote on
+    the position delta per candidate pair, keep the dominant offset,
+    and keep pairs whose matches at that offset cover >= half the
+    positions alignable at it (2*matched >= comparable, exact
+    integers).  This is what catches a re-upload with a trimmed head —
+    the first thing a real media ingest pipeline meets — which the
+    same-position matchers (video_near_dup, banded first-window audio)
+    provably miss.  ``containment=True`` is the snippet-search rule
+    instead: EVERY one of the left side's positions must match at the
+    dominant offset ("this jingle occurs in that clip").
 
     ``left``/``right``: standardized piece tables (id, idx, sh, q, qv)
-    whose positions are sampled at ``stride`` starting from 0 (audio
-    windows: stride 1; video frames: stride every_n).  With
-    ``directional=False`` both sides are the same relation and pairs
-    are id-ordered (id_l < id_r); with ``directional=True`` left is
-    the new batch and right the landed corpus — never old x old or
-    new x new.
+    (_landed_pieces).  With ``directional=False`` both sides are the
+    same relation and pairs are id-ordered (id_l < id_r); with
+    ``directional=True`` left is the new batch / snippets and right
+    the landed corpus — never old x old or new x new.  Returns
+    (id_l, id_r, offset, matched, comparable); _named_pairs maps it
+    onto each entry point's names.
 
     Offset convention: idx_first - idx_second where `first` is the
     smaller-id (symmetric) / corpus (directional) side — i.e. the
     number of head positions trimmed from the later/new item (positive
     for a head-trimmed re-upload).
 
-    Positions alignable at offset t = offset/stride (with n_first /
-    n_second sampled positions a side):
-        comparable = min(n_second-1, n_first-1-t) - max(0, -t) + 1
-    — the exact count of k with 0 <= k < n_second and
-    0 <= k + t < n_first.
+    The alignable-position count is the one place the grids differ:
 
-    100 TB shape: candidate fan-out is bounded by (q, qv) hash-key
-    occupancy (the banded join's own discipline — uniform for
-    hash-like sketches, never all-pairs); the offset vote is one
-    groupBy on (id, id, offset) small-int keys plus a per-pair
-    row_number window — no per-pair sequence alignment; the position
-    counts are an item-grain (dim-sized) aggregate joined back on the
-    pair keys; pixels/samples never shuffle (hashes left the decode
-    pass as 8-byte longs upstream)."""
+    * same grid (``residues=None``): both sides sampled at ``stride``
+      from 0 (audio windows: stride 1; video frames: every_n).  With
+      n_first / n_second sampled positions a side and
+      t = floor(offset/stride),
+          comparable = min(n_second-1, n_first-1-t) - max(0, -t) + 1
+      — the exact count of k with 0 <= k < n_second and
+      0 <= k + t < n_first.  Floor division, NOT truncation: mixed-
+      parity or gapped piece tables produce negative non-multiple
+      offsets (ADVICE r12).
+    * residue grid vs dense (``residues`` given): the LEFT side's
+      positions are the frames j ≡ r (mod stride) for r in
+      ``residues``; the RIGHT side is DENSE (every frame hashed), so
+      ANY integer offset aligns.
+          comparable(t) = #{j in left grid : 0 <= j -/+ t < m_right}
+                        = sum over r of #{j ≡ r (mod s) : lo <= j <= hi}
+          lo = max(0, ±t),  hi = min(gmax_left, m_right - 1 ± t)
+          #{j ≡ r in [lo, hi]} = floor((hi-r)/s) - floor((lo-1-r)/s)
+      (sign +t symmetric / -t directional; gmax_left = the left
+      side's largest grid position).  At stride=2, residues=(0,) this
+      is the r13 dual-parity formula (pinned in test_round14_ops
+      against brute force and the video_dual oracles).
+
+    The two formulas disagree on mixed-parity and gapped tables
+    (test_offset_vote_scaling_uses_floor_not_truncation), so they stay
+    two.  ``n_pieces``: rows per (id, idx) the piece tables carry
+    (_distinct_idx_counts); None counts distinct positions.
+
+    Scale shape (every offset entry point points here): candidate
+    fan-out is bounded by (q, qv) hash-key occupancy — the banded
+    join's own discipline, uniform for hash-like sketches, never
+    all-pairs; the vote is one groupBy on (id, id, offset) small-int
+    keys and the dominant offset one max(struct) aggregate over it
+    (_dominant_offset) — no per-pair sequence alignment, no window;
+    the position counts are item-grain (dim-sized) aggregates joined
+    back on the pair keys; pixels/samples never shuffle (hashes left
+    the decode pass as 8-byte longs upstream)."""
     votes = _offset_votes(left, right, max_hamming, directional)
     dom = _dominant_offset(votes)
-    cnt_l = _distinct_idx_counts(left, n_pieces, "_na")
-    # symmetric matchers pass the SAME persisted piece relation on
-    # both sides — build the per-id count aggregate once (r16)
-    cnt_r = (cnt_l.withColumnRenamed("_na", "_nb") if left is right
+    if residues is None:
+        stat_l = _distinct_idx_counts(left, n_pieces, "_na")
+        n_first = F.col("_na") if not directional else F.col("_nb")
+        n_second = F.col("_nb") if not directional else F.col("_na")
+        t = F.floor(F.col("offset") / F.lit(int(stride))).cast("long")
+        comparable = F.greatest(
+            F.lit(0), F.least(n_second - 1, n_first - 1 - t)
+            - F.greatest(F.lit(0), -t) + 1)
+    else:
+        s = int(stride)
+        rs = _check_residues(s, residues)
+        # max(idx) is duplicate-insensitive — no distinct pre-pass (r16)
+        stat_l = left.groupBy("id").agg(F.max("idx").alias("_gmax"))
+        t = F.col("offset")
+        sgn = F.lit(-1) if directional else F.lit(1)
+        lo = F.greatest(F.lit(0), (sgn * t).cast("long"))
+        hi = F.least(F.col("_gmax").cast("long"),
+                     (F.col("_nb") - 1 + sgn * t).cast("long"))
+        per_r = [F.floor((hi - F.lit(r)) / F.lit(float(s)))
+                 - F.floor((lo - 1 - F.lit(r)) / F.lit(float(s)))
+                 for r in rs]
+        comparable = F.when(hi >= lo, sum(per_r[1:], per_r[0])
+                            ).otherwise(F.lit(0))
+    # symmetric matchers pass the SAME persisted piece relation on both
+    # sides — build the per-id count aggregate once (r16)
+    cnt_r = (stat_l.withColumnRenamed("_na", "_nb") if left is right
              else _distinct_idx_counts(right, n_pieces, "_nb"))
     out = (dom
-           .join(cnt_l.withColumnRenamed("id", "id_l"), "id_l")
-           .join(cnt_r.withColumnRenamed("id", "id_r"), "id_r"))
-    n_first = F.col("_na") if not directional else F.col("_nb")
-    n_second = F.col("_nb") if not directional else F.col("_na")
-    # floor division, NOT truncation: the DuckDB oracles (and the
-    # documented alignable-count formula) use floor semantics, and
-    # while the shipped queries' stride-parity contract makes negative
-    # non-multiple offsets impossible, the library accepts arbitrary
-    # piece tables where mixed-parity grids produce them (ADVICE r12)
-    t = F.floor(F.col("offset") / F.lit(int(stride))).cast("long")
-    comparable = (F.least(n_second - 1, n_first - 1 - t)
-                  - F.greatest(F.lit(0), -t) + 1)
-    out = out.withColumn("comparable",
-                         F.greatest(F.lit(0), comparable).cast("long"))
-    # require_full_left: CONTAINMENT instead of coverage — every one
-    # of the left side's positions must match at the dominant offset
-    # (the snippet-search rule: "this jingle occurs in that clip")
-    keep = (F.col("matched") == F.col("_na") if require_full_left
+           .join(stat_l.withColumnRenamed("id", "id_l"), "id_l")
+           .join(cnt_r.withColumnRenamed("id", "id_r"), "id_r")
+           .withColumn("comparable", comparable.cast("long")))
+    keep = (F.col("matched") == F.col("_na") if containment
             else F.col("matched") * 2 >= F.col("comparable"))
     return (out.filter((F.col("comparable") > 0) & keep)
             .select("id_l", "id_r", "offset", "matched", "comparable"))
+
+
+# stored piece-table key columns per medium — persisted indexes and the
+# stream-static joins in streaming/ops.py read these names
+_AUDIO = ("aid", "win_idx")
+_VIDEO = ("vid", "frame_idx")
+# output pair names: symmetric self-join, new-batch x landed corpus,
+# snippet search
+_SELF = ("id_a", "id_b")
+_CROSS = ("new_id", "old_id")
+_SEARCH = ("snippet_id", "clip_id")
+
+
+def _landed_pieces(build, df: DataFrame, keys,
+                   is_piece_table: bool = False) -> DataFrame:
+    """One side of a media piece join in the standard (id, idx, sh, q,
+    qv) shape: ``df`` itself renamed when it already IS a stored piece
+    table with ``keys`` = (id, idx) names (the production shape —
+    piece-partitioned storage makes the join piece-pruned), otherwise
+    ``build(df)`` renamed and persisted, since the vote join and the
+    per-id counts both read it."""
+    from fsharp_dataframe_spark.functions.util import track_persist
+
+    def std(t: DataFrame) -> DataFrame:
+        return t.select(F.col(keys[0]).alias("id"),
+                        F.col(keys[1]).alias("idx"), "sh", "q", "qv")
+
+    return std(df) if is_piece_table else track_persist(std(build(df)))
+
+
+def _named_pairs(out: DataFrame, ids, unit: str,
+                 containment: bool = False) -> DataFrame:
+    """_offset_vote_match's (id_l, id_r, offset, matched, comparable)
+    under an entry point's names: ``ids`` for the pair, then
+    matched_/comparable_<unit> — or n_<unit> for containment search."""
+    counts = ([F.col("matched").alias(f"n_{unit}")] if containment else
+              [F.col("matched").alias(f"matched_{unit}"),
+               F.col("comparable").alias(f"comparable_{unit}")])
+    return out.select(F.col("id_l").alias(ids[0]),
+                      F.col("id_r").alias(ids[1]), "offset", *counts)
+
+
+def _aligned_match(left: DataFrame, right: DataFrame, max_hamming: int,
+                   ids) -> DataFrame:
+    """SAME-POSITION frame matching for video_near_dup /
+    cross_video_near_dup: the frame index rides the (piece,
+    piece-bits) join key — what makes these matchers cheap — so only
+    temporally aligned frames collide; keep pairs whose matched frames
+    cover at least half of compared = min(sampled_l, sampled_r)
+    (2·matched ≥ compared, exact integers).  ``left is right`` is the
+    symmetric self-join (id-ordered pairs).  Returns (ids…,
+    matched_frames, compared_frames).
+
+    100 TB shape: pixels never shuffle (hashes leave the decode pass
+    as 8-byte longs); candidates ride (frame, piece-index, piece-bits)
+    keys — uniform for hash-like sketches and never all-pairs; the
+    Hamming filter runs BEFORE the pair aggregate (the
+    banded_hamming_pairs discipline); the per-video sampled counts
+    are a dim-sized aggregate joined back into the pair rollup."""
+    a, b = ids
+    l, r = left.alias("l"), right.alias("r")
+    cond = ((F.col("l.idx") == F.col("r.idx"))
+            & (F.col("l.q") == F.col("r.q"))
+            & (F.col("l.qv") == F.col("r.qv")))
+    if left is right:
+        cond = cond & (F.col("l.id") < F.col("r.id"))
+    matched = (
+        l.join(r, cond)
+        .select(F.col("l.id").alias(a), F.col("r.id").alias(b),
+                F.col("l.idx").alias("frame_idx"),
+                F.bit_count(F.col("l.sh").bitwiseXOR(F.col("r.sh")))
+                .alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming)
+        .dropDuplicates([a, b, "frame_idx"])
+        .groupBy(a, b).agg(F.count("*").alias("matched_frames")))
+    cnt_l = _distinct_idx_counts(left, max_hamming + 1, "_na")
+    cnt_r = (cnt_l.withColumnRenamed("_na", "_nb") if left is right
+             else _distinct_idx_counts(right, max_hamming + 1, "_nb"))
+    out = (matched
+           .join(cnt_l.withColumnRenamed("id", a), a)
+           .join(cnt_r.withColumnRenamed("id", b), b)
+           .withColumn("compared_frames",
+                       F.least(F.col("_na"), F.col("_nb"))))
+    return (out.filter(F.col("matched_frames") * 2
+                       >= F.col("compared_frames"))
+            .select(a, b, "matched_frames", "compared_frames"))
 
 
 # ----------------------------------------------------------------------
@@ -1667,6 +1706,15 @@ AFP_FRAME = AFP_WIN * AFP_N_WIN  # 2048 samples per fingerprint window
 
 
 AFP_HOP = AFP_FRAME // 4  # 512-sample default hop for overlapped framing
+
+
+def _check_hop(hop) -> int:
+    """The overlapped framing's hop, validated at plan build (batch
+    and stream fronts alike): 1 <= hop <= one 2048-sample window."""
+    hop = int(hop)
+    if not 1 <= hop <= AFP_FRAME:
+        raise ValueError(f"hop must be in 1..{AFP_FRAME}, got {hop}")
+    return hop
 
 
 def _afp_windows_hop(s, hop: int) -> list[int]:
@@ -1728,40 +1776,9 @@ def audio_window_fingerprints(df: DataFrame,
     of video_frame_hashes: at 100 TB the payload bytes stream through
     one mapInPandas — windows never explode into a shuffle carrying
     samples; only the 8-byte fingerprints move."""
-    out_schema = T.StructType([
-        T.StructField(id_col, T.LongType(), False),
-        T.StructField("win_idx", T.IntegerType(), False),
-        T.StructField("afp", T.LongType(), True),
-        T.StructField("decode_ok", T.BooleanType(), False),
-    ])
-
-    def _fp(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            ids, idxs, fps, oks = [], [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                wfps = _afp_all_windows(
-                    _decode_wav_samples(payload, target_sr=AFP_SR))
-                if not wfps:
-                    ids.append(int(mid))
-                    idxs.append(0)
-                    fps.append(None)
-                    oks.append(False)
-                    continue
-                for wi, fp in enumerate(wfps):
-                    ids.append(int(mid))
-                    idxs.append(wi)
-                    fps.append(fp)
-                    oks.append(True)
-            yield pd.DataFrame({id_col: ids, "win_idx": idxs,
-                                "afp": _nullable_i64(fps),
-                                "decode_ok": oks})
-
-    from fsharp_dataframe_spark.functions.util import spread
-
-    return spread(df, id_col, payload_col).mapInPandas(
-        _fp, schema=out_schema)
+    return audio_overlap_fingerprints(df, hop=AFP_FRAME,
+                                      payload_col=payload_col,
+                                      id_col=id_col)
 
 
 def audio_window_piece_table(df: DataFrame, max_hamming: int = 2,
@@ -1772,20 +1789,9 @@ def audio_window_piece_table(df: DataFrame, max_hamming: int = 2,
     piece — written ONCE for the landed corpus (partition by ``q`` on
     disk), joined by every new batch.  The audio twin of
     video_frame_piece_table."""
-    from fsharp_dataframe_spark.functions.dedup import (
-        piece_expr, pigeonhole_pieces,
-    )
-
-    fh = (audio_window_fingerprints(df, payload_col=payload_col,
-                                    id_col=id_col)
-          .filter(F.col("decode_ok"))
-          .select(F.col(id_col).alias("aid"), "win_idx",
-                  F.col("afp").alias("sh")))
-    offs = pigeonhole_pieces(64, max_hamming)
-    return fh.select(
-        "aid", "win_idx", "sh",
-        F.posexplode(F.array(*[piece_expr(F.col("sh"), o, w)
-                               for o, w in offs])).alias("q", "qv"))
+    return audio_overlap_piece_table(df, hop=AFP_FRAME,
+                                     max_hamming=max_hamming,
+                                     payload_col=payload_col, id_col=id_col)
 
 
 def audio_stream_near_dup(df: DataFrame, max_hamming: int = 2,
@@ -1804,23 +1810,9 @@ def audio_stream_near_dup(df: DataFrame, max_hamming: int = 2,
     with offset = windows trimmed from id_b's head relative to id_a
     (positive when the larger-id clip lost its head).
 
-    Scale shape: see _offset_vote_pairs — banded candidates, never
-    all-pairs, one small-key vote aggregate, dim-sized counts."""
-    from fsharp_dataframe_spark.functions.util import track_persist
-
-    pieces = track_persist(
-        audio_window_piece_table(df, max_hamming=max_hamming,
-                                 payload_col=payload_col,
-                                 id_col=id_col)
-        .select(F.col("aid").alias("id"),
-                F.col("win_idx").alias("idx"), "sh", "q", "qv"))
-    out = _offset_vote_pairs(pieces, pieces, stride=1,
-                             max_hamming=max_hamming, directional=False,
-                             n_pieces=max_hamming + 1)
-    return out.select(F.col("id_l").alias("id_a"),
-                      F.col("id_r").alias("id_b"), "offset",
-                      F.col("matched").alias("matched_windows"),
-                      F.col("comparable").alias("comparable_windows"))
+    Scale shape: see _offset_vote_match."""
+    return audio_overlap_near_dup(df, hop=AFP_FRAME, max_hamming=max_hamming,
+                                  payload_col=payload_col, id_col=id_col)
 
 
 def cross_audio_stream_near_dup(new: DataFrame, existing: DataFrame,
@@ -1842,27 +1834,10 @@ def cross_audio_stream_near_dup(new: DataFrame, existing: DataFrame,
     (new_id, old_id, offset, matched_windows, comparable_windows) with
     offset = windows trimmed from the NEW clip's head relative to the
     landed one."""
-    from fsharp_dataframe_spark.functions.util import track_persist
-
-    npc = track_persist(
-        audio_window_piece_table(new, max_hamming=max_hamming,
-                                 payload_col=payload_col,
-                                 id_col=id_col)
-        .select(F.col("aid").alias("id"),
-                F.col("win_idx").alias("idx"), "sh", "q", "qv"))
-    epc = (existing if existing_is_piece_table
-           else track_persist(audio_window_piece_table(
-               existing, max_hamming=max_hamming,
-               payload_col=payload_col, id_col=id_col)))
-    epc = epc.select(F.col("aid").alias("id"),
-                     F.col("win_idx").alias("idx"), "sh", "q", "qv")
-    out = _offset_vote_pairs(npc, epc, stride=1,
-                             max_hamming=max_hamming, directional=True,
-                             n_pieces=max_hamming + 1)
-    return out.select(F.col("id_l").alias("new_id"),
-                      F.col("id_r").alias("old_id"), "offset",
-                      F.col("matched").alias("matched_windows"),
-                      F.col("comparable").alias("comparable_windows"))
+    return cross_audio_overlap_near_dup(
+        new, existing, hop=AFP_FRAME, max_hamming=max_hamming,
+        payload_col=payload_col, id_col=id_col,
+        existing_is_piece_table=existing_is_piece_table)
 
 
 # ----------------------------------------------------------------------
@@ -1929,20 +1904,6 @@ def trim_video_head(df: DataFrame, n_frames: int,
     return out
 
 
-def _video_pieces_std(df: DataFrame, every_n: int, max_hamming: int,
-                      payload_col: str, id_col: str,
-                      residues=(0,)) -> DataFrame:
-    """video_frame_piece_table renamed to the _offset_vote_pairs
-    standard (id, idx, sh, q, qv)."""
-    return (video_frame_piece_table(df, every_n=every_n,
-                                    max_hamming=max_hamming,
-                                    payload_col=payload_col,
-                                    id_col=id_col,
-                                    residues=residues)
-            .select(F.col("vid").alias("id"),
-                    F.col("frame_idx").alias("idx"), "sh", "q", "qv"))
-
-
 def video_near_dup_offset(df: DataFrame, every_n: int = 2,
                           max_hamming: int = 2,
                           payload_col: str = "payload",
@@ -1963,18 +1924,15 @@ def video_near_dup_offset(df: DataFrame, every_n: int = 2,
     sampled grid off the original's and cannot match — sample every
     frame (every_n=1) where sub-stride trims matter.
 
-    Scale shape: see _offset_vote_pairs."""
-    from fsharp_dataframe_spark.functions.util import track_persist
-
-    pieces = track_persist(_video_pieces_std(df, every_n, max_hamming,
-                                             payload_col, id_col))
-    out = _offset_vote_pairs(pieces, pieces, stride=every_n,
+    Scale shape: see _offset_vote_match."""
+    pieces = _landed_pieces(
+        partial(video_frame_piece_table, every_n=every_n,
+                max_hamming=max_hamming, payload_col=payload_col,
+                id_col=id_col), df, _VIDEO)
+    out = _offset_vote_match(pieces, pieces, stride=every_n,
                              max_hamming=max_hamming, directional=False,
                              n_pieces=max_hamming + 1)
-    return out.select(F.col("id_l").alias("id_a"),
-                      F.col("id_r").alias("id_b"), "offset",
-                      F.col("matched").alias("matched_frames"),
-                      F.col("comparable").alias("comparable_frames"))
+    return _named_pairs(out, _SELF, "frames")
 
 
 def cross_video_near_dup_offset(new: DataFrame, existing: DataFrame,
@@ -1993,23 +1951,15 @@ def cross_video_near_dup_offset(new: DataFrame, existing: DataFrame,
     Returns (new_id, old_id, offset, matched_frames,
     comparable_frames) with offset = frames trimmed from the NEW
     video's head relative to the landed one."""
-    from fsharp_dataframe_spark.functions.util import track_persist
-
-    npc = track_persist(_video_pieces_std(new, every_n, max_hamming,
-                                          payload_col, id_col))
-    epc = (existing.select(F.col("vid").alias("id"),
-                           F.col("frame_idx").alias("idx"),
-                           "sh", "q", "qv")
-           if existing_is_piece_table
-           else track_persist(_video_pieces_std(
-               existing, every_n, max_hamming, payload_col, id_col)))
-    out = _offset_vote_pairs(npc, epc, stride=every_n,
-                             max_hamming=max_hamming, directional=True,
-                             n_pieces=max_hamming + 1)
-    return out.select(F.col("id_l").alias("new_id"),
-                      F.col("id_r").alias("old_id"), "offset",
-                      F.col("matched").alias("matched_frames"),
-                      F.col("comparable").alias("comparable_frames"))
+    build = partial(video_frame_piece_table, every_n=every_n,
+                    max_hamming=max_hamming, payload_col=payload_col,
+                    id_col=id_col)
+    out = _offset_vote_match(
+        _landed_pieces(build, new, _VIDEO),
+        _landed_pieces(build, existing, _VIDEO, existing_is_piece_table),
+        stride=every_n, max_hamming=max_hamming, directional=True,
+        n_pieces=max_hamming + 1)
+    return _named_pairs(out, _CROSS, "frames")
 
 
 # ----------------------------------------------------------------------
@@ -2216,31 +2166,12 @@ def audio_snippet_search(snippets: DataFrame, corpus: DataFrame,
     Returns (snippet_id, clip_id, offset, n_windows) with offset =
     the window position in the clip where the snippet starts.
 
-    100 TB shape: identical to _offset_vote_pairs — banded candidates
-    bounded by hash-key occupancy, one small-key vote, dim-sized
-    counts; a million-snippet query set is |snippets|-bounded against
-    any corpus size."""
-    from fsharp_dataframe_spark.functions.util import track_persist
-
-    spc = track_persist(
-        audio_window_piece_table(snippets, max_hamming=max_hamming,
-                                 payload_col=payload_col,
-                                 id_col=id_col)
-        .select(F.col("aid").alias("id"),
-                F.col("win_idx").alias("idx"), "sh", "q", "qv"))
-    cpc = (corpus if corpus_is_piece_table
-           else track_persist(audio_window_piece_table(
-               corpus, max_hamming=max_hamming,
-               payload_col=payload_col, id_col=id_col)))
-    cpc = cpc.select(F.col("aid").alias("id"),
-                     F.col("win_idx").alias("idx"), "sh", "q", "qv")
-    out = _offset_vote_pairs(spc, cpc, stride=1,
-                             max_hamming=max_hamming, directional=True,
-                             require_full_left=True,
-                             n_pieces=max_hamming + 1)
-    return out.select(F.col("id_l").alias("snippet_id"),
-                      F.col("id_r").alias("clip_id"), "offset",
-                      F.col("matched").alias("n_windows"))
+    Scale shape: see _offset_vote_match; a million-snippet query set
+    is |snippets|-bounded against any corpus size."""
+    return audio_overlap_snippet_search(
+        snippets, corpus, hop=AFP_FRAME, max_hamming=max_hamming,
+        payload_col=payload_col, id_col=id_col,
+        corpus_is_piece_table=corpus_is_piece_table)
 
 
 def slice_video_frames(df: DataFrame, start_frame: int, n_frames: int,
@@ -2314,23 +2245,15 @@ def video_snippet_search(snippets: DataFrame, corpus: DataFrame,
     the near-dup ingest paths join.  Returns (snippet_id, clip_id,
     offset, n_frames) with offset = the frame position in the clip
     where the excerpt starts."""
-    from fsharp_dataframe_spark.functions.util import track_persist
-
-    spc = track_persist(_video_pieces_std(snippets, every_n, max_hamming,
-                                          payload_col, id_col))
-    cpc = (corpus.select(F.col("vid").alias("id"),
-                         F.col("frame_idx").alias("idx"),
-                         "sh", "q", "qv")
-           if corpus_is_piece_table
-           else track_persist(_video_pieces_std(
-               corpus, every_n, max_hamming, payload_col, id_col)))
-    out = _offset_vote_pairs(spc, cpc, stride=every_n,
-                             max_hamming=max_hamming, directional=True,
-                             require_full_left=True,
-                             n_pieces=max_hamming + 1)
-    return out.select(F.col("id_l").alias("snippet_id"),
-                      F.col("id_r").alias("clip_id"), "offset",
-                      F.col("matched").alias("n_frames"))
+    build = partial(video_frame_piece_table, every_n=every_n,
+                    max_hamming=max_hamming, payload_col=payload_col,
+                    id_col=id_col)
+    out = _offset_vote_match(
+        _landed_pieces(build, snippets, _VIDEO),
+        _landed_pieces(build, corpus, _VIDEO, corpus_is_piece_table),
+        stride=every_n, max_hamming=max_hamming, directional=True,
+        containment=True, n_pieces=max_hamming + 1)
+    return _named_pairs(out, _SEARCH, "frames", containment=True)
 
 
 # ----------------------------------------------------------------------
@@ -2398,14 +2321,12 @@ def video_shared_segments(df: DataFrame, every_n: int = 2,
     single-frame coincidences; raise it to demand longer shared runs.
     Same stride-parity contract as the other offset operators.
 
-    100 TB shape: exactly the offset matchers' — banded candidates
-    bounded by hash-key occupancy, one small-key vote aggregate, no
-    dominant-offset window at all (every qualifying offset IS output),
-    pixels never shuffle."""
-    from fsharp_dataframe_spark.functions.util import track_persist
-
-    pieces = track_persist(_video_pieces_std(df, every_n, max_hamming,
-                                             payload_col, id_col))
+    Scale shape: the vote front of _offset_vote_match, with no
+    dominant-offset pick at all (every qualifying offset IS output)."""
+    pieces = _landed_pieces(
+        partial(video_frame_piece_table, every_n=every_n,
+                max_hamming=max_hamming, payload_col=payload_col,
+                id_col=id_col), df, _VIDEO)
     votes = _offset_votes(pieces, pieces, max_hamming=max_hamming,
                           directional=False)
     return (votes.filter(F.col("matched") >= int(min_run))
@@ -2593,9 +2514,7 @@ def audio_overlap_fingerprints(df: DataFrame, hop: int = AFP_HOP,
     100 TB shape: identical to audio_window_fingerprints — payload
     bytes stream through ONE mapInPandas, a single vectorized rFFT
     per clip covers all windows, only 8-byte longs leave the pass."""
-    hop = int(hop)
-    if not 1 <= hop <= AFP_FRAME:
-        raise ValueError(f"hop must be in 1..{AFP_FRAME}, got {hop}")
+    hop = _check_hop(hop)
     out_schema = T.StructType([
         T.StructField(id_col, T.LongType(), False),
         T.StructField("win_idx", T.IntegerType(), False),
@@ -2641,9 +2560,7 @@ def audio_overlap_piece_table(df: DataFrame, hop: int = AFP_HOP,
     piece — written once for the landed corpus (partition by ``q``),
     joined by every new batch.  Same schema as
     audio_window_piece_table, 2048/hop times the rows."""
-    from fsharp_dataframe_spark.functions.dedup import (
-        piece_expr, pigeonhole_pieces,
-    )
+    from fsharp_dataframe_spark.functions.dedup import _piece_bands
 
     fh = (audio_overlap_fingerprints(df, hop=hop,
                                      payload_col=payload_col,
@@ -2651,11 +2568,7 @@ def audio_overlap_piece_table(df: DataFrame, hop: int = AFP_HOP,
           .filter(F.col("decode_ok"))
           .select(F.col(id_col).alias("aid"), "win_idx",
                   F.col("afp").alias("sh")))
-    offs = pigeonhole_pieces(64, max_hamming)
-    return fh.select(
-        "aid", "win_idx", "sh",
-        F.posexplode(F.array(*[piece_expr(F.col("sh"), o, w)
-                               for o, w in offs])).alias("q", "qv"))
+    return _piece_bands(fh, ["aid", "win_idx"], max_hamming)
 
 
 def audio_overlap_near_dup(df: DataFrame, hop: int = AFP_HOP,
@@ -2676,25 +2589,17 @@ def audio_overlap_near_dup(df: DataFrame, hop: int = AFP_HOP,
     family's documented floor).
 
     Returns (id_a, id_b, offset, matched_windows, comparable_windows).
-    Scale shape: see _offset_vote_pairs — banded candidates, never
-    all-pairs, one small-key vote aggregate, dim-sized counts; the
-    overlapped fan-out multiplies index rows by 2048/hop, not
-    candidate fan-out per row (hash-key occupancy still rules)."""
-    from fsharp_dataframe_spark.functions.util import track_persist
-
-    pieces = track_persist(
-        audio_overlap_piece_table(df, hop=hop, max_hamming=max_hamming,
-                                  payload_col=payload_col,
-                                  id_col=id_col)
-        .select(F.col("aid").alias("id"),
-                F.col("win_idx").alias("idx"), "sh", "q", "qv"))
-    out = _offset_vote_pairs(pieces, pieces, stride=1,
+    Scale shape: see _offset_vote_match; the overlapped fan-out
+    multiplies index rows by 2048/hop, not candidate fan-out per row
+    (hash-key occupancy still rules)."""
+    pieces = _landed_pieces(
+        partial(audio_overlap_piece_table, hop=hop,
+                max_hamming=max_hamming, payload_col=payload_col,
+                id_col=id_col), df, _AUDIO)
+    out = _offset_vote_match(pieces, pieces, stride=1,
                              max_hamming=max_hamming, directional=False,
                              n_pieces=max_hamming + 1)
-    return out.select(F.col("id_l").alias("id_a"),
-                      F.col("id_r").alias("id_b"), "offset",
-                      F.col("matched").alias("matched_windows"),
-                      F.col("comparable").alias("comparable_windows"))
+    return _named_pairs(out, _SELF, "windows")
 
 
 def cross_audio_overlap_near_dup(new: DataFrame, existing: DataFrame,
@@ -2713,27 +2618,15 @@ def cross_audio_overlap_near_dup(new: DataFrame, existing: DataFrame,
     Returns (new_id, old_id, offset, matched_windows,
     comparable_windows) with offset in hop units = audio trimmed from
     the NEW clip's head."""
-    from fsharp_dataframe_spark.functions.util import track_persist
-
-    npc = track_persist(
-        audio_overlap_piece_table(new, hop=hop, max_hamming=max_hamming,
-                                  payload_col=payload_col,
-                                  id_col=id_col)
-        .select(F.col("aid").alias("id"),
-                F.col("win_idx").alias("idx"), "sh", "q", "qv"))
-    epc = (existing if existing_is_piece_table
-           else track_persist(audio_overlap_piece_table(
-               existing, hop=hop, max_hamming=max_hamming,
-               payload_col=payload_col, id_col=id_col)))
-    epc = epc.select(F.col("aid").alias("id"),
-                     F.col("win_idx").alias("idx"), "sh", "q", "qv")
-    out = _offset_vote_pairs(npc, epc, stride=1,
-                             max_hamming=max_hamming, directional=True,
-                             n_pieces=max_hamming + 1)
-    return out.select(F.col("id_l").alias("new_id"),
-                      F.col("id_r").alias("old_id"), "offset",
-                      F.col("matched").alias("matched_windows"),
-                      F.col("comparable").alias("comparable_windows"))
+    build = partial(audio_overlap_piece_table, hop=hop,
+                    max_hamming=max_hamming, payload_col=payload_col,
+                    id_col=id_col)
+    out = _offset_vote_match(
+        _landed_pieces(build, new, _AUDIO),
+        _landed_pieces(build, existing, _AUDIO, existing_is_piece_table),
+        stride=1, max_hamming=max_hamming, directional=True,
+        n_pieces=max_hamming + 1)
+    return _named_pairs(out, _CROSS, "windows")
 
 
 # ----------------------------------------------------------------------
@@ -2755,62 +2648,6 @@ def _check_residues(every_n: int, residues) -> tuple[int, ...]:
             f"residues must lie in 0..{s - 1} (mod every_n={s}), "
             f"got {tuple(residues)}")
     return rs
-
-
-def _offset_vote_pairs_residues(grid: DataFrame, dense: DataFrame,
-                                stride: int, residues,
-                                max_hamming: int,
-                                directional: bool,
-                                n_pieces: int | None = None) -> DataFrame:
-    """Offset-vote rollup for the residue-set video tier: the LEFT
-    side's positions are the frames ``j ≡ r (mod stride)`` for ``r``
-    in ``residues``; the RIGHT side is DENSE (every frame hashed).
-    Votes and the dominant offset work exactly as _offset_vote_pairs;
-    only the alignable-position count changes —
-
-        comparable(t) = #{j in left grid : 0 <= j -/+ t < m_right}
-                      = sum over r in residues of
-                        #{j ≡ r (mod s) : lo <= j <= hi}
-        with  lo = max(0, ±t),  hi = min(gmax_left, m_right - 1 ± t)
-        and   #{j ≡ r in [lo, hi]} = floor((hi-r)/s)
-                                     - floor((lo-1-r)/s)
-
-    (sign +t symmetric / -t directional; gmax_left = the left side's
-    largest grid position, so j never exceeds frames the left clip
-    actually has).  At stride=2, residues=(0,) this closed form
-    reduces exactly to the r13 dual-parity formulas (pinned
-    bit-identical in test_round14_ops against brute force and the
-    registered video_dual oracles).  Because the right side is dense,
-    ANY integer offset aligns — a trim of ANY size is caught at any
-    stride, where same-grid matchers are structurally blind to
-    non-multiples of the stride."""
-    s = int(stride)
-    rs = _check_residues(s, residues)
-    votes = _offset_votes(grid, dense, max_hamming, directional)
-    dom = _dominant_offset(votes)
-    # max(idx) is duplicate-insensitive — the former distinct pre-pass
-    # was a pure extra exchange (r16, guide §2.4)
-    gstat = grid.groupBy("id").agg(F.max("idx").alias("_gmax"))
-    cnt_d = _distinct_idx_counts(dense, n_pieces, "_nb")
-    out = (dom
-           .join(gstat.withColumnRenamed("id", "id_l"), "id_l")
-           .join(cnt_d.withColumnRenamed("id", "id_r"), "id_r"))
-    t = F.col("offset")
-    sgn = F.lit(-1) if directional else F.lit(1)
-    lo = F.greatest(F.lit(0), (sgn * t).cast("long"))
-    hi = F.least(F.col("_gmax").cast("long"),
-                 (F.col("_nb") - 1 + sgn * t).cast("long"))
-    comp = None
-    for r in rs:
-        c = (F.floor((hi - F.lit(r)) / F.lit(float(s)))
-             - F.floor((lo - 1 - F.lit(r)) / F.lit(float(s))))
-        comp = c if comp is None else comp + c
-    out = out.withColumn(
-        "comparable",
-        F.when(hi >= lo, comp).otherwise(F.lit(0)).cast("long"))
-    keep = F.col("matched") * 2 >= F.col("comparable")
-    return (out.filter((F.col("comparable") > 0) & keep)
-            .select("id_l", "id_r", "offset", "matched", "comparable"))
 
 
 def video_near_dup_dual(df: DataFrame, every_n: int = 2,
@@ -2840,26 +2677,20 @@ def video_near_dup_dual(df: DataFrame, every_n: int = 2,
     proportionally more candidate rows; the dense right side already
     guarantees every offset aligns with a single residue.
 
-    100 TB shape: the piece index is ``every_n/1`` denser than the
-    sampled matcher (the explicit recall/cost dial) — but candidate
-    fan-out stays hash-key-occupancy-bounded, the vote is one
-    small-key groupBy, counts are dim-sized, pixels never shuffle."""
-    from fsharp_dataframe_spark.functions.util import track_persist
-
+    Scale shape: see _offset_vote_match; the piece index is
+    ``every_n/1`` denser than the sampled matcher (the explicit
+    recall/cost dial)."""
     s = int(every_n)
     rs = _check_residues(s, residues)
-    dense = track_persist(_video_pieces_std(df, 1, max_hamming,
-                                            payload_col, id_col))
+    dense = _landed_pieces(
+        partial(video_frame_piece_table, every_n=1,
+                max_hamming=max_hamming, payload_col=payload_col,
+                id_col=id_col), df, _VIDEO)
     grid = dense.filter((F.col("idx") % s).isin(list(rs)))
-    out = _offset_vote_pairs_residues(grid, dense, stride=s,
-                                      residues=rs,
-                                      max_hamming=max_hamming,
-                                      directional=False,
-                                      n_pieces=max_hamming + 1)
-    return out.select(F.col("id_l").alias("id_a"),
-                      F.col("id_r").alias("id_b"), "offset",
-                      F.col("matched").alias("matched_frames"),
-                      F.col("comparable").alias("comparable_frames"))
+    out = _offset_vote_match(grid, dense, stride=s,
+                             max_hamming=max_hamming, directional=False,
+                             residues=rs, n_pieces=max_hamming + 1)
+    return _named_pairs(out, _SELF, "frames")
 
 
 def cross_video_near_dup_dual(new: DataFrame, existing: DataFrame,
@@ -2883,28 +2714,18 @@ def cross_video_near_dup_dual(new: DataFrame, existing: DataFrame,
     Returns (new_id, old_id, offset, matched_frames,
     comparable_frames), offset = frames trimmed from the NEW video's
     head (any integer)."""
-    from fsharp_dataframe_spark.functions.util import track_persist
-
     s = int(every_n)
     rs = _check_residues(s, residues)
-    npc = track_persist(_video_pieces_std(new, s, max_hamming,
-                                          payload_col, id_col,
-                                          residues=rs))
-    epc = (existing.select(F.col("vid").alias("id"),
-                           F.col("frame_idx").alias("idx"),
-                           "sh", "q", "qv")
-           if existing_is_piece_table
-           else track_persist(_video_pieces_std(
-               existing, 1, max_hamming, payload_col, id_col)))
-    out = _offset_vote_pairs_residues(npc, epc, stride=s,
-                                      residues=rs,
-                                      max_hamming=max_hamming,
-                                      directional=True,
-                                      n_pieces=max_hamming + 1)
-    return out.select(F.col("id_l").alias("new_id"),
-                      F.col("id_r").alias("old_id"), "offset",
-                      F.col("matched").alias("matched_frames"),
-                      F.col("comparable").alias("comparable_frames"))
+    build = partial(video_frame_piece_table, max_hamming=max_hamming,
+                    payload_col=payload_col, id_col=id_col)
+    out = _offset_vote_match(
+        _landed_pieces(partial(build, every_n=s, residues=rs), new,
+                       _VIDEO),
+        _landed_pieces(partial(build, every_n=1), existing, _VIDEO,
+                       existing_is_piece_table),
+        stride=s, max_hamming=max_hamming, directional=True,
+        residues=rs, n_pieces=max_hamming + 1)
+    return _named_pairs(out, _CROSS, "frames")
 
 
 # ----------------------------------------------------------------------
@@ -3381,29 +3202,15 @@ def audio_overlap_snippet_search(snippets: DataFrame, corpus: DataFrame,
     overlap near-dup ingest joins, so one overlap index serves dedup
     AND search.  Returns (snippet_id, clip_id, offset, n_windows).
 
-    100 TB shape: identical to audio_snippet_search —
-    |snippets|-bounded against any corpus size, banded candidates,
-    one small-key vote; the overlap index costs 2048/hop more rows
-    (the shared recall/cost dial)."""
-    from fsharp_dataframe_spark.functions.util import track_persist
-
-    spc = track_persist(
-        audio_overlap_piece_table(snippets, hop=hop,
-                                  max_hamming=max_hamming,
-                                  payload_col=payload_col,
-                                  id_col=id_col)
-        .select(F.col("aid").alias("id"),
-                F.col("win_idx").alias("idx"), "sh", "q", "qv"))
-    cpc = (corpus if corpus_is_piece_table
-           else track_persist(audio_overlap_piece_table(
-               corpus, hop=hop, max_hamming=max_hamming,
-               payload_col=payload_col, id_col=id_col)))
-    cpc = cpc.select(F.col("aid").alias("id"),
-                     F.col("win_idx").alias("idx"), "sh", "q", "qv")
-    out = _offset_vote_pairs(spc, cpc, stride=1,
-                             max_hamming=max_hamming, directional=True,
-                             require_full_left=True,
-                             n_pieces=max_hamming + 1)
-    return out.select(F.col("id_l").alias("snippet_id"),
-                      F.col("id_r").alias("clip_id"), "offset",
-                      F.col("matched").alias("n_windows"))
+    Scale shape: see _offset_vote_match — |snippets|-bounded against
+    any corpus size; the overlap index costs 2048/hop more rows (the
+    shared recall/cost dial)."""
+    build = partial(audio_overlap_piece_table, hop=hop,
+                    max_hamming=max_hamming, payload_col=payload_col,
+                    id_col=id_col)
+    out = _offset_vote_match(
+        _landed_pieces(build, snippets, _AUDIO),
+        _landed_pieces(build, corpus, _AUDIO, corpus_is_piece_table),
+        stride=1, max_hamming=max_hamming, directional=True,
+        containment=True, n_pieces=max_hamming + 1)
+    return _named_pairs(out, _SEARCH, "windows", containment=True)

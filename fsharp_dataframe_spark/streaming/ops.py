@@ -1969,8 +1969,14 @@ def _video_frame_sketch(sdf: DataFrame, id_col: str, payload_col: str,
     from pyspark.sql.functions import pandas_udf
 
     from fsharp_dataframe_spark.functions.multimodal import (
-        _FSV_MAGIC, _decode_gray_array, _dhash_from_gray, unpack_frame,
+        _FSV_MAGIC, _check_residues, _decode_gray_array, _dhash_from_gray,
+        unpack_frame,
     )
+
+    # the batch front's check, at plan build: every_n=0 would otherwise
+    # fail in the executor at range(0, n, 0)
+    _check_residues(every_n, (0,))
+    every_n = int(every_n)
 
     @pandas_udf("array<struct<frame_idx:int, sh:long>>")
     def vfh(payloads: pd.Series) -> pd.Series:
@@ -2000,6 +2006,42 @@ def _video_frame_sketch(sdf: DataFrame, id_col: str, payload_col: str,
             .select(id_col, ts_col,
                     F.col("_fh.frame_idx").alias("frame_idx"),
                     F.col("_fh.sh").alias("sh")))
+
+
+def _audio_window_sketch(sdf: DataFrame, id_col: str, payload_col: str,
+                         hop: int, keep_cols: tuple = ()) -> DataFrame:
+    """Stateless per-window fingerprint front shared by the whole-stream
+    and overlapped audio candidate streams (the audio twin of
+    _video_frame_sketch): one spectral fingerprint per 2048-sample
+    window every ``hop`` samples (multimodal._afp_windows_hop, one
+    vectorized rFFT per clip, rate-normalized decode); emits one
+    (id, keep_cols…, win_idx, sh) row per window.  ``hop`` is checked
+    at plan build with the batch rule (1 <= hop <= 2048) — a zero,
+    negative or over-window hop would otherwise divide by zero in the
+    executor or silently yield no windows."""
+    from pyspark.sql.functions import pandas_udf
+
+    from fsharp_dataframe_spark.functions.multimodal import (
+        AFP_SR, _afp_windows_hop, _check_hop, _decode_wav_samples,
+    )
+
+    hop = _check_hop(hop)
+
+    @pandas_udf("array<struct<win_idx:int, sh:long>>")
+    def awf(payloads: pd.Series) -> pd.Series:
+        rows = []
+        for p in payloads:
+            fps = _afp_windows_hop(
+                _decode_wav_samples(p, target_sr=AFP_SR), hop)
+            rows.append([{"win_idx": i, "sh": fp}
+                         for i, fp in enumerate(fps)])
+        return pd.Series(rows)
+
+    return (sdf.select(F.col(id_col), *[F.col(c) for c in keep_cols],
+                       F.explode(awf(F.col(payload_col))).alias("_wf"))
+            .select(id_col, *keep_cols,
+                    F.col("_wf.win_idx").alias("win_idx"),
+                    F.col("_wf.sh").alias("sh")))
 
 
 def stream_video_near_dup(sdf: DataFrame, id_col: str = "media_id",
@@ -2041,7 +2083,7 @@ def stream_video_offset_near_dup(sdf: DataFrame,
     candidate row reports (frame_idx_a, frame_idx_b,
     frame_idx_delta).  The consumer's offset vote — groupBy (id_a,
     id_b, frame_idx_delta), dominant offset, coverage rule — is its
-    first batch aggregate, exactly the batch _offset_vote_pairs
+    first batch aggregate, exactly the batch _offset_vote_match
     discipline (the stream_near_dup_candidates emission contract).
 
     State: identical horizon bound to the aligned stream; per-row
@@ -2072,26 +2114,10 @@ def stream_audio_window_near_dup(sdf: DataFrame,
     Samples never enter state (fingerprints leave the stateless
     Arrow pass as 8-byte longs); join state is O(rate ×
     windows-per-clip × watermark)."""
-    from pyspark.sql.functions import pandas_udf
+    from fsharp_dataframe_spark.functions.multimodal import AFP_FRAME
 
-    from fsharp_dataframe_spark.functions.multimodal import (
-        AFP_SR, _afp_all_windows, _decode_wav_samples,
-    )
-
-    @pandas_udf("array<struct<win_idx:int, sh:long>>")
-    def awf(payloads: pd.Series) -> pd.Series:
-        rows = []
-        for p in payloads:
-            fps = _afp_all_windows(_decode_wav_samples(p, target_sr=AFP_SR))
-            rows.append([{"win_idx": i, "sh": fp}
-                         for i, fp in enumerate(fps)])
-        return pd.Series(rows)
-
-    sk = (sdf.select(F.col(id_col), F.col(ts_col),
-                     F.explode(awf(F.col(payload_col))).alias("_wf"))
-          .select(id_col, ts_col,
-                  F.col("_wf.win_idx").alias("win_idx"),
-                  F.col("_wf.sh").alias("sh")))
+    sk = _audio_window_sketch(sdf, id_col, payload_col, AFP_FRAME,
+                              (ts_col,))
     return _stream_pieces_near_dup(sk, id_col=id_col, ts_col=ts_col,
                                    watermark=watermark,
                                    max_hamming=max_hamming,
@@ -2126,29 +2152,10 @@ def stream_audio_overlap_near_dup(sdf: DataFrame,
     State: the window twin's bound times the 2048/hop overlap fan-out
     (4x at the default) — the same recall/cost dial as the batch
     operator; samples never enter state."""
-    from pyspark.sql.functions import pandas_udf
+    from fsharp_dataframe_spark.functions.multimodal import AFP_HOP
 
-    from fsharp_dataframe_spark.functions.multimodal import (
-        AFP_HOP, AFP_SR, _afp_windows_hop, _decode_wav_samples,
-    )
-
-    hop = int(hop) if hop is not None else AFP_HOP
-
-    @pandas_udf("array<struct<win_idx:int, sh:long>>")
-    def awf(payloads: pd.Series) -> pd.Series:
-        rows = []
-        for p in payloads:
-            fps = _afp_windows_hop(
-                _decode_wav_samples(p, target_sr=AFP_SR), hop)
-            rows.append([{"win_idx": i, "sh": fp}
-                         for i, fp in enumerate(fps)])
-        return pd.Series(rows)
-
-    sk = (sdf.select(F.col(id_col), F.col(ts_col),
-                     F.explode(awf(F.col(payload_col))).alias("_wf"))
-          .select(id_col, ts_col,
-                  F.col("_wf.win_idx").alias("win_idx"),
-                  F.col("_wf.sh").alias("sh")))
+    sk = _audio_window_sketch(sdf, id_col, payload_col,
+                              AFP_HOP if hop is None else hop, (ts_col,))
     return _stream_pieces_near_dup(sk, id_col=id_col, ts_col=ts_col,
                                    watermark=watermark,
                                    max_hamming=max_hamming,
@@ -2207,15 +2214,10 @@ def _stream_static_pieces_near_dup(sketched: DataFrame,
     100 TB shape: per micro-batch this is the batch cross join —
     candidates bounded by hash-key occupancy against a
     partition-pruned (``q``) static scan pinned at plan time."""
-    from fsharp_dataframe_spark.functions.dedup import (
-        piece_expr, pigeonhole_pieces,
-    )
+    from fsharp_dataframe_spark.functions.dedup import _piece_bands
 
-    offs = pigeonhole_pieces(64, max_hamming)
-    banded = sketched.select(
-        id_col, *align_cols, *carry_cols, "sh",
-        F.posexplode(F.array(*[piece_expr(F.col("sh"), off, w)
-                               for off, w in offs])).alias("q", "qv"))
+    banded = _piece_bands(sketched, [id_col, *align_cols, *carry_cols],
+                          max_hamming)
     l, r = banded.alias("l"), stored.alias("r")
     ham = F.bit_count(F.col("l.sh").bitwiseXOR(F.col("r.sh")))
     cond = ((F.col("l.q") == F.col("r.q"))
@@ -2280,29 +2282,10 @@ def stream_cross_audio_overlap_near_dup(sdf: DataFrame,
     micro-batch, corpus size irrelevant to state, sub-window head
     trims caught at hop resolution.  Emits (win_idx_new/old/delta)
     candidates; consumer votes the batch discipline (pinned)."""
-    from pyspark.sql.functions import pandas_udf
+    from fsharp_dataframe_spark.functions.multimodal import AFP_HOP
 
-    from fsharp_dataframe_spark.functions.multimodal import (
-        AFP_HOP, AFP_SR, _afp_windows_hop, _decode_wav_samples,
-    )
-
-    hop = int(hop) if hop is not None else AFP_HOP
-
-    @pandas_udf("array<struct<win_idx:int, sh:long>>")
-    def awf(payloads: pd.Series) -> pd.Series:
-        rows = []
-        for p in payloads:
-            fps = _afp_windows_hop(
-                _decode_wav_samples(p, target_sr=AFP_SR), hop)
-            rows.append([{"win_idx": i, "sh": fp}
-                         for i, fp in enumerate(fps)])
-        return pd.Series(rows)
-
-    sk = (sdf.select(F.col(id_col),
-                     F.explode(awf(F.col(payload_col))).alias("_wf"))
-          .select(id_col,
-                  F.col("_wf.win_idx").alias("win_idx"),
-                  F.col("_wf.sh").alias("sh")))
+    sk = _audio_window_sketch(sdf, id_col, payload_col,
+                              AFP_HOP if hop is None else hop)
     stored = stored_pieces.select(
         F.col("aid").alias(id_col),
         F.col("win_idx"), "sh", "q", "qv")
@@ -2381,20 +2364,14 @@ def _stream_pieces_near_dup(sketched: DataFrame, id_col: str,
     kept from BOTH sides in the output WITHOUT joining (emitted as
     <c>_a / <c>_b plus their delta) — the offset-tolerant emission:
     the consumer's offset vote is its first groupBy, exactly the
-    batch _offset_vote_pairs discipline."""
-    from fsharp_dataframe_spark.functions.dedup import (
-        piece_expr, pigeonhole_pieces,
-    )
+    batch _offset_vote_match discipline."""
+    from fsharp_dataframe_spark.functions.dedup import _piece_bands
 
     # shared banding substrate: validated cuts + the w=64 full-width
     # piece handled without the LongType mask overflow (ADVICE r10)
-    offs = pigeonhole_pieces(64, max_hamming)
-    banded = (sketched
-              .select(id_col, ts_col, *align_cols, *carry_cols, "sh",
-                      F.posexplode(F.array(*[
-                          piece_expr(F.col("sh"), off, w)
-                          for off, w in offs
-                      ])).alias("q", "qv"))
+    banded = (_piece_bands(sketched,
+                           [id_col, ts_col, *align_cols, *carry_cols],
+                           max_hamming)
               .withWatermark(ts_col, watermark))
     l, r = banded.alias("l"), banded.alias("r")
     ham = F.bit_count(F.col("l.sh").bitwiseXOR(F.col("r.sh")))

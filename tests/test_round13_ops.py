@@ -53,7 +53,7 @@ def test_offset_vote_scaling_uses_floor_not_truncation(spark):
                 rows.append((mid, idx, sh, q, (sh >> o) & ((1 << w) - 1)))
     pieces = spark.createDataFrame(
         rows, "id long, idx long, sh long, q int, qv long")
-    got = M._offset_vote_pairs(pieces, pieces, stride=2, max_hamming=2,
+    got = M._offset_vote_match(pieces, pieces, stride=2, max_hamming=2,
                                directional=False).collect()
     assert len(got) == 1
     r = got[0]

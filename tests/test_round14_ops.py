@@ -486,7 +486,7 @@ def test_residue_comparable_formula_brute_force(spark):
                 if brute > 0:
                     expect[(gl, dr)] = (t0, matched, brute)
             got = {}
-            res = M._offset_vote_pairs_residues(
+            res = M._offset_vote_match(
                 pieces(grid_rows), pieces(dense_rows), stride=s,
                 residues=rs, max_hamming=2, directional=directional)
             for r in res.collect():
