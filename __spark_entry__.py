@@ -2888,359 +2888,6 @@ def q_transitions(spark, sf) -> DataFrame:
     return event_transitions(ev)
 
 
-# ----------------------------------------------------------------------
-# registry
-# ----------------------------------------------------------------------
-
-# The driver's correctness harness checks the FIRST 50 entries of
-# queries(); these stay implemented and oracle-checked locally
-# (tests/test_oracle_extra.py + tools/check_oracle.py) but are held out
-# of the driver registry so every DECLARED query gets a driver row.
-# ROUND-5 ROTATION (VERDICT r4 ask #2): the 14 queries held out in
-# round 4 (append_frames, pairwise, take_last, sample_time, frame_zip,
-# fill_constant, drop_sparse, cast_types, stats_melt, frame_shift_diff,
-# pack_shards, text_stats, embed_centroids, embed_near_dup) are now IN
-# the driver window; held out instead are 14 veterans that earned
-# all-green driver rows in BOTH round 3 and round 4
-# (CORRECTNESS_r03/r04), each with an in-window sibling exercising the
-# same code path:
-# group_agg→group_stats (same groupBy/agg), zip_inner→frame_zip +
-# frame_arith (Zip kinds), frame_join_left→join_broadcast (Frame.Join
-# exact), realign→append_frames/union_prefer_left (index algebra),
-# shift_diff→frame_shift_diff + pairwise, resample_daily→resample_keys
-# + resample_uniform, pivot→stats_melt (unstack/stack),
-# slice_between→sample_time + filter_project (Between slicing),
-# window_moving_avg→window_dist (windowSize machinery),
-# chunk_sum→chunk_dist + pack_shards (bucketed census substrate),
-# first_last→take_last + maxby_minby, scalar_math→cast_types (same
-# As<'R> casts + math fns), drop_missing→drop_sparse + fill_constant,
-# text_quality→text_stats + corpus_stats (same token/ratio exprs).
-# Union of CORRECTNESS_r04 ∪ r5 green rows covers all 64 queries.
-# (r5 additions: knn_join / incremental_dedup / vocab_topk enter the
-# window; three more r3+r4-green veterans rotate out to make room —
-# asof_grouped→asof_join, resample_uniform→resample_keys,
-# union_prefer_left→append_frames, each sibling staying in-window.)
-# (c4_stats / unigram_quality enter in their place: frame_arith→
-# scalar-on-frame arithmetic also exercised by scalar_math's sibling
-# cast_types + zip paths; maxby_minby→first_last/take_last +
-# group_stats — both r3+r4-green.)
-# (dedup_spans / sample_stratified / lang_mix enter in their place:
-# join_broadcast→asof_join + append_frames (Frame.Join machinery),
-# fill_forward→fill_constant (fill family), lookup_level→
-# lookup_time_fwd + index_ordinal (level/positional lookup) — all
-# three r3+r4-green veterans with in-window siblings.)
-# (sessionize / bm25_search enter in their place: lang_hits→
-# text_stats carries the same lang-ID column exprs (lang_pred) +
-# corpus_stats groups on lang; ivf_topk→ivf_assign (same argmin
-# assign) + embed_topk (same exact rescore) — both r3+r4-green.)
-# (funnel / profile_cols enter in their place: lookup_time_fwd→
-# sample_time + index_ordinal (lookupTime/positional machinery;
-# lookup_level's sibling index_ordinal stays in-window);
-# dedup_exact→clean_corpus + incremental_dedup (both compose
-# exact_dedup as their first stage) — both r3+r4-green.)
-# (retention enters in its place: chunk_dist→window_dist (same
-# bucketed global-distance machinery) + chunk_sum's cited sibling
-# pack_shards stays in-window — r3+r4-green.)
-# (key_skew enters in its place: ngram_jaccard→clean_corpus +
-# dedup_clusters + near_dedup's verify tier all compose the same
-# shingle/jaccard machinery in-window — r3+r4-green.)
-# (bpe_pairs / doc_keywords / semantic_dedup / chunk_docs enter in
-# their place — four veterans rotate out, each with in-window
-# siblings: group_stats→corpus_stats + stats_melt (same grouped
-# stats), filter_project→cast_types + text_stats (filter+project
-# everywhere), embed_topk→knn_join + lsh_topk (same exact cosine
-# rescore), ivf_assign→ivf_train (replays the identical assignment
-# argmin per iteration) + semantic_dedup (composes ivf_assign
-# directly) — all r3+r4-green or r4-green with multi-query overlap.)
-# ROUND-6 ROTATION (VERDICT r5 ask #1): the goal is a driver-green row
-# for ALL 96 registered queries in the CORRECTNESS_r5 ∪ r6 union.  Every
-# one of round 5's 50 in-window queries earned a green row in r5 itself
-# (50/50 all-green), so they are ALL rotation-eligible — the strongest
-# possible "sibling" evidence is the query's own driver row one round
-# ago.  The round-6 window is therefore:
-#   - the 14 round-5 newcomers (embed_project .. window_while_par),
-#     locally three-SF strict-oracle green, now earning driver rows;
-#   - the 32 veterans held out since earlier rotations (group_agg,
-#     zip_inner, ... ivf_assign) — re-entering so their rows refresh in
-#     the same union (each was driver-green in r3/r4 and has stayed
-#     green in tests/test_oracle_extra.py + tools/check_oracle.py at
-#     sf0.01, re-run in full this session: 96 ok, 0 failing);
-#   - 4 r5-window keepers spanning the heaviest new machinery
-#     (semantic_dedup: cell-blocked pair join + closure; bm25_search:
-#     term-filtered postings; sessionize: event windowing; knn_join:
-#     blocked ANN) for round-over-round repeat evidence.
-# Held out (the 46 remaining r5-window queries below): every one has an
-# r5 driver-green row, stays under the local strict-oracle gate, and
-# keeps in-window siblings through the returning veterans (e.g.
-# dedup_exact/clean_corpus machinery returns via dedup_exact itself;
-# window/chunk substrate via chunk_sum/chunk_dist/window_moving_avg;
-# zip/join algebra via zip_inner/frame_join_left/join_broadcast).
-# ROUND-7 ROTATION (VERDICT r6 ask #1): the 31 round-6 newcomers
-# (group_ols, mad_outliers, entropy_quality, clean_text, winsorize,
-# histogram, corr_matrix, grouped_topk, daily_activity, ohlc_weekly,
-# vwap_monthly, drawdown, returns_series, autocorr1, interval_week1,
-# interval_burst, sample_group, group_quantiles, cross_zscore,
-# rolling_zscore, tpch_q3, diverse_sample, market_beta,
-# seasonal_profile, dedup_report, salted_agg, props_json,
-# seasonal_anomaly, fuzzy_names, quantile_bins, target_encode — the
-# r6 plan comment said "25 newcomers"; the actual list was and is 31)
-# enter the driver window to earn their first driver rows, completing
-# the r5∪r6∪r7 union over all 127 registered queries.  Alongside them,
-# 19 KEEPERS from the r6 window span the heaviest machinery for
-# round-over-round repeat evidence: semantic_dedup (cell-blocked pair
-# join + closure), bm25_search (term-filtered postings), sessionize
-# (event windowing — also the query VERDICT r6 flagged for an
-# environment-dependent timing, so its r7 row doubles as the bench
-# confirmation), knn_join (blocked ANN), dedup_keep_best (star
-# contraction), dedup_exact (cascade base), asof_grouped (as-of),
-# resample_daily, pivot, group_agg (core algebra), embed_project (JL),
-# perplexity_buckets, pmi_collocations, weighted_sample, and the FIVE
-# bucketed-substrate queries under the r6 perf-regression watch
-# (window_while_par, ewma, fill_linear, pack_sequences, chunk_dist) so
-# the substrate profiling lands with fresh driver rows.  Every query
-# rotated OUT below carries its own driver-green row in CORRECTNESS_r05
-# or _r06 (the strongest sibling evidence, per the r6 playbook) and
-# stays under the local strict-oracle gate (tools/check_oracle.py).
-# ROUND-8 ROTATION (VERDICT r7 ask #1): the 14 round-7 newcomers
-# (media_png_decode, scd2_track, scd2_pit, attribution, basket_pairs,
-# phrase_hits, rank_features, split_leakage, sales_cube, tpch_q5,
-# snapshot_diff, transitions, twap_daily, gap_report) enter the
-# driver window to earn their first driver rows — three-SF
-# strict-oracle green locally since r7 — completing the r7∪r8 union
-# over all 141 pre-round-8 registered queries.  The 14 veterans
-# rotated OUT in their place (asof_grouped, bm25_search, dedup_exact,
-# dedup_keep_best, embed_project, group_agg, knn_join,
-# perplexity_buckets, pivot, pmi_collocations, resample_daily,
-# semantic_dedup, sessionize, weighted_sample) are each
-# r6+r7-DOUBLE-green in the driver's own JSONs — the strongest
-# sibling evidence — and stay under the local strict-oracle gate.
-# The five r6/r7-double-green bucketed-substrate queries (chunk_dist,
-# ewma, fill_linear, pack_sequences, window_while_par) are KEPT
-# in-window deliberately: round 8 rewrites the census cut lookup to a
-# cut-count-independent form (VERDICT r7 ask #3), so the new substrate
-# code must earn fresh driver rows, not coast on r7's.
-# ROUND-9 ROTATION (VERDICT r8 ask #1): the 11 round-8 newcomers
-# (training_mix, media_mixed, hybrid_search, token_budget, cusum,
-# rolling_median, asof_tolerance, hard_negatives, tpch_q14, tpch_q4,
-# trimmed_mean — each locally three-SF oracle-green since r8) enter
-# the driver window to earn their first driver rows, completing the
-# r8∪r9 union over all 152 pre-round-9 registered queries.  The 11
-# veterans rotated OUT in their place (autocorr1, corr_matrix,
-# cross_zscore, daily_activity, drawdown, group_quantiles, histogram,
-# interval_week1, ohlc_weekly, returns_series, vwap_monthly) are each
-# r7+r8-DOUBLE-green in the driver's own CORRECTNESS JSONs and are
-# simple stat/window/agg shapes whose machinery stays represented
-# in-window by siblings (rolling_zscore, market_beta, seasonal_profile,
-# interval_burst, tpch_q3, sales_cube, twap_daily).  The five
-# bucketed-substrate queries (chunk_dist, ewma, fill_linear,
-# pack_sequences, window_while_par) are KEPT in-window again
-# deliberately: round 9 threads as-of `tolerance` through the bucketed
-# carry cascade and guards attach_mapping's dense path, so the touched
-# substrate must earn fresh driver rows, not coast on r8's.  cusum is
-# rotated in ON its round-9 JVM-window rewrite (VERDICT r8 ask #2), so
-# its first driver row certifies the new code.
-# ROUND-10 ROTATION (VERDICT r9 ask #1): the 10 round-9 newcomers
-# (tpch_q1, tpch_q6, asof_multikey, psi_drift, classifier_auc,
-# zipf_fit, int8_quantize, source_overlap, pack_efficiency,
-# centroid_drift — each locally three-SF oracle-green since r9) enter
-# the driver window to earn their first driver rows, completing the
-# r9∪r10 union over all 162 pre-round-10 registered queries.  The 10
-# veterans rotated OUT in their place (attribution, clean_text,
-# grouped_topk, props_json, rolling_zscore, sample_group,
-# seasonal_profile, target_encode, twap_daily, winsorize) are each
-# r8+r9-DOUBLE-green in the driver's own CORRECTNESS JSONs and every
-# rotated shape keeps an in-window sibling: events/attribution ->
-# scd2_track/scd2_pit/transitions/snapshot_diff/gap_report; text
-# cleaning -> entropy_quality/media_mixed; window ranking ->
-# rank_features; JSON extraction -> sales_cube's props path is gone,
-# but props_json is a plain get_json_object projection whose machinery
-# (Column exprs) underlies every in-window query; rolling stats ->
-# rolling_median/market_beta; sampling -> diverse_sample; group-mean
-# join -> group_ols/salted_agg; seasonal profile -> seasonal_anomaly;
-# time-window agg -> interval_burst/trimmed_mean; robust clamp ->
-# mad_outliers/quantile_bins.  int8_quantize rotates in ON its
-# round-10 single-scan rewrite (VERDICT r9 ask #5) and source_overlap
-# ON its round-10 phantom-shingle fix (ADVICE r9), so their first
-# driver rows certify the new code.
-# ROUND-11 ROTATION (VERDICT r10 ask #1): the 7 round-10 newcomers
-# (tpch_q17, image_near_dup, tpch_q18, ngram_novelty,
-# image_dedup_clusters, tpch_q22, containment_pairs — each locally
-# three-SF oracle-green since r10) enter the driver window to earn
-# their first driver rows, completing the r10∪r11 union over all 169
-# pre-round-11 registered queries.  containment_pairs rotates in ON
-# its round-11 hot-shingle skew-cap rewrite (VERDICT r10 ask #2 /
-# "What's wrong" #2), so its first driver row certifies the guarded
-# code — the int8_quantize/source_overlap discipline.  The 7 veterans
-# rotated OUT in their place (asof_tolerance, basket_pairs,
-# chunk_dist, cusum, dedup_report, diverse_sample, entropy_quality)
-# are each r9+r10-DOUBLE-green in the driver's own CORRECTNESS JSONs
-# and every rotated shape keeps an in-window sibling: tolerance as-of
-# -> asof_multikey (same bucketed lookup substrate); co-occurrence
-# self-join -> sales_cube/source_overlap's shapes and the three image
-# pair joins; bucketed chunk substrate -> ewma/fill_linear/
-# pack_sequences/window_while_par (all kept in-window); sequential
-# scan stats -> scd2_track/transitions; dedup rollup ->
-# the in-window image dedup trio + ngram_novelty; diversity sampling
-# -> training_mix/hard_negatives; text-entropy scoring ->
-# ngram_novelty/media_mixed.
-# ROUND-12 ROTATION (VERDICT r11 ask #1, executed): the 21 round-11
-# newcomers (tpch_q2/q7/q8/q9/q10/q11/q12/q13/q15/q16/q19/q20/q21,
-# image_incr_dedup, embed_incr_dedup, semantic_incr_dedup,
-# audio_near_dup, audio_incr_dedup, video_near_dup, video_incr_dedup,
-# media_catalog — each locally three-SF oracle-green since r11) enter
-# the driver window to earn their first driver rows, so the r11∪r12
-# CORRECTNESS union covers all 190 registered queries.  The 21
-# veterans rotated OUT in their place are each r10+r11-DOUBLE-green
-# in the driver's own CORRECTNESS JSONs, and every rotated shape
-# keeps an in-window sibling: the six classic TPC-H veterans
-# tpch_q1/q3/q4/q5/q6/q14 -> the 13 incoming TPC-H plan classes plus
-# in-window q17/q18/q22 (scan-agg, join-order, exists/semi, OR-
-# distribution shapes all covered); ewma/fill_linear (bucketed carry
-# substrate) -> pack_sequences + window_while_par (kept in-window);
-# media_png_decode/media_mixed -> media_catalog (incoming) +
-# image_near_dup/image_dedup_clusters (in-window) + the four incoming
-# modality tiers; scd2_pit -> scd2_track; rolling_median (ordered
-# window rollup) -> trimmed_mean + interval_burst; market_beta
-# (grouped regression) -> group_ols; quantile_bins (robust clamp) ->
-# mad_outliers; salted_agg (skew-guarded agg) -> sales_cube +
-# group_ols; phrase_hits -> hybrid_search; fuzzy_names (linkage) ->
-# hard_negatives + the incoming embed/semantic incremental paths;
-# token_budget -> training_mix + pack_efficiency; psi_drift ->
-# centroid_drift + classifier_auc + zipf_fit; snapshot_diff ->
-# transitions + scd2_track; gap_report -> interval_burst +
-# transitions.
-EXTRA_QUERIES = (
-    "append_frames", "asof_join", "bigram_quality", "bpe_pairs",
-    "c4_stats", "cast_types", "chunk_docs", "chunk_sum", "chunk_while",
-    "clean_corpus", "corpus_stats", "decontaminate", "dedup_clusters",
-    "dedup_paragraphs", "dedup_spans", "doc_keywords", "drop_missing",
-    "drop_sparse", "embed_centroids", "embed_near_dup",
-    "embed_near_dup_lsh", "embed_topk", "fill_constant", "fill_forward",
-    "filter_project", "first_last", "frame_arith", "frame_join_left",
-    "frame_shift_diff", "frame_zip", "funnel", "group_stats",
-    "hash_split", "incremental_dedup", "index_ordinal", "ivf_assign",
-    "ivf_topk", "ivf_train", "join_broadcast", "key_skew", "lang_hits",
-    "lang_mix", "lookup_level", "lookup_time_fwd", "lsh_topk",
-    "maxby_minby", "media_features",
-    # rotated out in r8 (each r6+r7-double-green in the driver's own
-    # CORRECTNESS JSONs) to make room for the 14 round-7 newcomers:
-    "asof_grouped", "bm25_search", "dedup_exact", "dedup_keep_best",
-    "embed_project", "group_agg", "knn_join", "perplexity_buckets",
-    "pivot", "pmi_collocations", "resample_daily", "semantic_dedup",
-    "sessionize", "weighted_sample",
-    "minhash_pairs", "near_dedup",
-    "ngram_jaccard", "pack_shards", "pairwise", "profile_cols",
-    "quality_classifier", "realign", "rep_quality", "resample_keys",
-    "resample_uniform", "retention", "rolling_corr",
-    "sample_stratified", "sample_time", "scalar_math", "shift_diff",
-    "simhash_pairs", "slice_between", "stats_melt", "take_last",
-    "text_quality", "text_stats", "unigram_quality",
-    # rotated out in r9 (each r7+r8-double-green in the driver's own
-    # CORRECTNESS JSONs) to make room for the 11 round-8 newcomers:
-    "autocorr1", "corr_matrix", "cross_zscore", "daily_activity",
-    "drawdown", "group_quantiles", "histogram", "interval_week1",
-    "ohlc_weekly", "returns_series", "vwap_monthly",
-    "union_prefer_left", "vocab_drift", "vocab_topk", "window_dist",
-    "window_moving_avg", "zip_inner",
-    # rotated out in r10 (each r8+r9-double-green in the driver's own
-    # CORRECTNESS JSONs) to make room for the 10 round-9 newcomers:
-    "attribution", "clean_text", "grouped_topk", "props_json",
-    "rolling_zscore", "sample_group", "seasonal_profile",
-    "target_encode", "twap_daily", "winsorize",
-    # rotated out in r11 (each r9+r10-double-green in the driver's own
-    # CORRECTNESS JSONs) to make room for the 7 round-10 newcomers:
-    "asof_tolerance", "basket_pairs", "chunk_dist", "cusum",
-    "dedup_report", "diverse_sample", "entropy_quality",
-    # rotated out in r12 (each r10+r11-double-green in the driver's
-    # own CORRECTNESS JSONs) to make room for the 21 round-11
-    # newcomers, sibling map in the ROUND-12 ROTATION comment above:
-    "tpch_q1", "tpch_q3", "tpch_q4", "tpch_q5", "tpch_q6", "tpch_q14",
-    "ewma", "fill_linear", "media_png_decode", "media_mixed",
-    "scd2_pit", "rolling_median", "market_beta", "quantile_bins",
-    "salted_agg", "phrase_hits", "fuzzy_names", "token_budget",
-    "psi_drift", "snapshot_diff", "gap_report",
-    # ROUND-13 ROTATION (VERDICT r12 ask #1, executed): the 7
-    # round-12 newcomers (audio_stream_dedup/incr, video_offset_dedup/
-    # incr, audio/video snippet search, video_segments) ENTER the
-    # driver window to earn their first driver rows, so the r12 u r13
-    # CORRECTNESS union covers all 197 pre-round-13 queries.  The 7
-    # veterans rotated OUT below are each r11+r12-DOUBLE-green in the
-    # driver's own CORRECTNESS JSONs, and every rotated shape keeps an
-    # in-window sibling: image_near_dup (banded dHash pair join) ->
-    # image_dedup_clusters + image_incr_dedup (in-window) + the seven
-    # incoming banded offset/containment tiers; containment_pairs
-    # (n-gram containment join) -> source_overlap + ngram_novelty;
-    # tpch_q17 (correlated scalar-avg subquery) -> tpch_q2 (correlated
-    # min) + tpch_q20 (nested scalar agg); tpch_q18 (group-having
-    # semi) -> tpch_q10/q20/q21; tpch_q22 (anti-join + scalar avg) ->
-    # tpch_q16 (not-in) + tpch_q21 (exists/anti); trimmed_mean
-    # (per-group ordered trim) -> mad_outliers + interval_burst;
-    # classifier_auc (rank/window agg) -> rank_features + zipf_fit:
-    "image_near_dup", "containment_pairs", "tpch_q17", "tpch_q18",
-    "tpch_q22", "trimmed_mean", "classifier_auc",
-    # ROUND-14 ROTATION (VERDICT r13 ask #1, executed): the 6
-    # round-13 newcomers (audio_overlap_dedup/incr, audio_rate_dedup,
-    # video_dual_dedup/incr, audio_overlap_snippet) ENTER the driver
-    # window to earn their first driver rows, so the r13 u r14
-    # CORRECTNESS union covers all 203 pre-round-14 queries.  The 6
-    # veterans rotated OUT below are each r12+r13-DOUBLE-green in the
-    # driver's own CORRECTNESS JSONs, and every rotated shape keeps an
-    # in-window sibling: audio_near_dup / audio_incr_dedup
-    # (same-position banded audio tier) -> audio_stream_dedup /
-    # audio_stream_incr + audio_snippet_search (in-window) + the
-    # incoming overlapped tiers audio_overlap_dedup / _incr /
-    # _snippet + audio_rate_dedup; video_near_dup / video_incr_dedup
-    # (same-position banded video tier) -> video_offset_dedup /
-    # video_offset_incr + video_segments + video_snippet_search
-    # (in-window) + the incoming video_dual_dedup / video_dual_incr;
-    # tpch_q12 (join + conditional two-way agg) -> tpch_q8
-    # (CASE-share agg) + tpch_q7 (join-heavy conditional rollup);
-    # tpch_q13 (left outer join + group-count histogram) -> tpch_q16
-    # (count-distinct distribution) + tpch_q10/q21 (outer/anti
-    # shapes):
-    "audio_near_dup", "audio_incr_dedup", "video_near_dup",
-    "video_incr_dedup", "tpch_q12", "tpch_q13",
-    # ROUND-15 ROTATION (VERDICT r14 ask #1, executed): the 5
-    # round-14 newcomers (video_residue_dedup/incr,
-    # audio_hop_fine_dedup, audio_ber_verify, image_crop_verify)
-    # ENTER the driver window to earn their first driver rows, so the
-    # r14 u r15 CORRECTNESS union covers all 208 pre-round-15
-    # queries.  The 5 veterans rotated OUT below are each r13+r14-
-    # DOUBLE-green in the driver's own CORRECTNESS JSONs, and every
-    # rotated shape keeps an in-window sibling: video_offset_dedup /
-    # video_offset_incr (offset-vote video tier) -> the incoming
-    # video_residue_dedup / video_residue_incr (the residue-set
-    # generalization of the same vote) + video_dual_dedup /
-    # video_dual_incr + video_segments (in-window); audio_stream_dedup
-    # (whole-stream banded audio tier) -> audio_stream_incr (its
-    # directional twin, kept in-window) + audio_overlap_dedup /
-    # audio_overlap_incr / audio_rate_dedup (in-window) + the incoming
-    # audio_hop_fine_dedup / audio_ber_verify; audio_snippet_search
-    # (sub-window containment search) -> audio_overlap_snippet +
-    # video_snippet_search (in-window, same containment rule);
-    # image_dedup_clusters (banded dHash cluster tier) ->
-    # image_incr_dedup (in-window banded image tier) + the incoming
-    # image_crop_verify (the stage behind its near-misses):
-    "video_offset_dedup", "video_offset_incr", "audio_stream_dedup",
-    "audio_snippet_search", "image_dedup_clusters")
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {k: v for k, v in _all_queries().items() if k not in EXTRA_QUERIES}
-
-
-def oracle_sql() -> dict[str, str]:
-    return {k: v for k, v in _all_oracle_sql().items() if k not in EXTRA_QUERIES}
-
-
-def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {k: v for k, v in _all_queries().items() if k in EXTRA_QUERIES}
-
-
-def extra_oracle_sql() -> dict[str, str]:
-    return {k: v for k, v in _all_oracle_sql().items() if k in EXTRA_QUERIES}
-
-
 def q_tpch_q1(spark, sf) -> DataFrame:
     """TPC-H Q1 pricing summary: the canonical wide-aggregate scan —
     six aggregates + three averages per (returnflag, linestatus), all
@@ -4789,219 +4436,6 @@ def q_audio_overlap_snippet(spark, sf) -> DataFrame:
              .withColumn("media_id", F.col("media_id") + F.lit(n)))
     return (audio_overlap_snippet_search(snips, media, max_hamming=2)
             .orderBy("snippet_id", "clip_id"))
-
-
-def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "group_agg": q_group_agg,
-        "group_stats": q_group_stats,
-        "stats_melt": q_stats_melt,
-        "maxby_minby": q_maxby_minby,
-        "pivot": q_pivot,
-        "filter_project": q_filter_project,
-        "frame_arith": q_frame_arith,
-        "cast_types": q_cast_types,
-        "slice_between": q_slice_between,
-        "scalar_math": q_scalar_math,
-        "union_prefer_left": q_union_prefer_left,
-        "zip_inner": q_zip_inner,
-        "join_broadcast": q_join_broadcast,
-        "frame_join_left": q_frame_join_left,
-        "append_frames": q_append_frames,
-        "asof_join": q_asof_join,
-        "asof_grouped": q_asof_grouped,
-        "realign": q_realign,
-        "shift_diff": q_shift_diff,
-        "window_moving_avg": q_window_moving_avg,
-        "chunk_sum": q_chunk_sum,
-        "pairwise": q_pairwise,
-        "window_dist": q_window_dist,
-        "chunk_while": q_chunk_while,
-        "chunk_dist": q_chunk_dist,
-        "frame_shift_diff": q_frame_shift_diff,
-        "take_last": q_take_last,
-        "resample_daily": q_resample_daily,
-        "resample_keys": q_resample_keys,
-        "resample_uniform": q_resample_uniform,
-        "sample_time": q_sample_time,
-        "fill_forward": q_fill_forward,
-        "drop_missing": q_drop_missing,
-        "lookup_time_fwd": q_lookup_time_fwd,
-        "index_ordinal": q_index_ordinal,
-        "lookup_level": q_lookup_level,
-        "first_last": q_first_last,
-        "frame_zip": q_frame_zip,
-        "fill_constant": q_fill_constant,
-        "drop_sparse": q_drop_sparse,
-        "dedup_exact": q_dedup_exact,
-        "text_stats": q_text_stats,
-        "lang_hits": q_lang_hits,
-        "text_quality": q_text_quality,
-        "corpus_stats": q_corpus_stats,
-        "rep_quality": q_rep_quality,
-        "ngram_jaccard": q_ngram_jaccard,
-        "clean_corpus": q_clean_corpus,
-        "embed_topk": q_embed_topk,
-        "embed_centroids": q_embed_centroids,
-        "embed_near_dup": q_embed_near_dup,
-        "embed_near_dup_lsh": q_embed_near_dup_lsh,
-        "embed_incr_dedup": q_embed_incr_dedup,
-        "semantic_incr_dedup": q_semantic_incr_dedup,
-        "minhash_pairs": q_minhash_pairs,
-        "simhash_pairs": q_simhash_pairs,
-        "near_dedup": q_near_dedup,
-        "lsh_topk": q_lsh_topk,
-        "ivf_assign": q_ivf_assign,
-        "ivf_topk": q_ivf_topk,
-        "ivf_train": q_ivf_train,
-        "media_features": q_media_features,
-        "media_png_decode": q_media_png_decode,
-        "image_near_dup": q_image_near_dup,
-        "audio_near_dup": q_audio_near_dup,
-        "audio_incr_dedup": q_audio_incr_dedup,
-        "video_near_dup": q_video_near_dup,
-        "video_incr_dedup": q_video_incr_dedup,
-        "media_catalog": q_media_catalog,
-        "audio_stream_dedup": q_audio_stream_dedup,
-        "audio_stream_incr": q_audio_stream_incr,
-        "video_offset_dedup": q_video_offset_dedup,
-        "video_offset_incr": q_video_offset_incr,
-        "audio_snippet_search": q_audio_snippet_search,
-        "video_snippet_search": q_video_snippet_search,
-        "video_segments": q_video_segments,
-        "audio_overlap_dedup": q_audio_overlap_dedup,
-        "audio_overlap_incr": q_audio_overlap_incr,
-        "audio_rate_dedup": q_audio_rate_dedup,
-        "video_dual_dedup": q_video_dual_dedup,
-        "video_dual_incr": q_video_dual_incr,
-        "audio_ber_verify": q_audio_ber_verify,
-        "image_crop_verify": q_image_crop_verify,
-        "audio_hop_fine_dedup": q_audio_hop_fine_dedup,
-        "video_residue_dedup": q_video_residue_dedup,
-        "video_residue_incr": q_video_residue_incr,
-        "audio_overlap_snippet": q_audio_overlap_snippet,
-        "image_dedup_clusters": q_image_dedup_clusters,
-        "image_incr_dedup": q_image_incr_dedup,
-        "media_mixed": q_media_mixed,
-        "hybrid_search": q_hybrid_search,
-        "dedup_clusters": q_dedup_clusters,
-        "decontaminate": q_decontaminate,
-        "hash_split": q_hash_split,
-        "pack_shards": q_pack_shards,
-        "knn_join": q_knn_join,
-        "incremental_dedup": q_incremental_dedup,
-        "vocab_topk": q_vocab_topk,
-        "c4_stats": q_c4_stats,
-        "unigram_quality": q_unigram_quality,
-        "dedup_spans": q_dedup_spans,
-        "sample_stratified": q_sample_stratified,
-        "lang_mix": q_lang_mix,
-        "sessionize": q_sessionize,
-        "bm25_search": q_bm25_search,
-        "funnel": q_funnel,
-        "profile_cols": q_profile_cols,
-        "retention": q_retention,
-        "key_skew": q_key_skew,
-        "bpe_pairs": q_bpe_pairs,
-        "doc_keywords": q_doc_keywords,
-        "semantic_dedup": q_semantic_dedup,
-        "chunk_docs": q_chunk_docs,
-        "embed_project": q_embed_project,
-        "bigram_quality": q_bigram_quality,
-        "quality_classifier": q_quality_classifier,
-        "dedup_paragraphs": q_dedup_paragraphs,
-        "vocab_drift": q_vocab_drift,
-        "fill_linear": q_fill_linear,
-        "rolling_corr": q_rolling_corr,
-        "pack_sequences": q_pack_sequences,
-        "training_mix": q_training_mix,
-        "token_budget": q_token_budget,
-        "cusum": q_cusum,
-        "rolling_median": q_rolling_median,
-        "asof_tolerance": q_asof_tolerance,
-        "hard_negatives": q_hard_negatives,
-        "tpch_q14": q_tpch_q14,
-        "tpch_q4": q_tpch_q4,
-        "tpch_q1": q_tpch_q1,
-        "tpch_q6": q_tpch_q6,
-        "tpch_q2": q_tpch_q2,
-        "tpch_q7": q_tpch_q7,
-        "tpch_q8": q_tpch_q8,
-        "tpch_q9": q_tpch_q9,
-        "tpch_q10": q_tpch_q10,
-        "tpch_q11": q_tpch_q11,
-        "tpch_q12": q_tpch_q12,
-        "tpch_q13": q_tpch_q13,
-        "tpch_q15": q_tpch_q15,
-        "tpch_q16": q_tpch_q16,
-        "tpch_q17": q_tpch_q17,
-        "tpch_q18": q_tpch_q18,
-        "tpch_q19": q_tpch_q19,
-        "tpch_q20": q_tpch_q20,
-        "tpch_q21": q_tpch_q21,
-        "tpch_q22": q_tpch_q22,
-        "containment_pairs": q_containment_pairs,
-        "ngram_novelty": q_ngram_novelty,
-        "asof_multikey": q_asof_multikey,
-        "psi_drift": q_psi_drift,
-        "classifier_auc": q_classifier_auc,
-        "zipf_fit": q_zipf_fit,
-        "int8_quantize": q_int8_quantize,
-        "source_overlap": q_source_overlap,
-        "pack_efficiency": q_pack_efficiency,
-        "centroid_drift": q_centroid_drift,
-        "trimmed_mean": q_trimmed_mean,
-        "pmi_collocations": q_pmi_collocations,
-        "ewma": q_ewma,
-        "weighted_sample": q_weighted_sample,
-        "dedup_keep_best": q_dedup_keep_best,
-        "perplexity_buckets": q_perplexity_buckets,
-        "window_while_par": q_window_while_par,
-        "group_ols": q_group_ols,
-        "mad_outliers": q_mad_outliers,
-        "entropy_quality": q_entropy_quality,
-        "clean_text": q_clean_text,
-        "winsorize": q_winsorize,
-        "histogram": q_histogram,
-        "corr_matrix": q_corr_matrix,
-        "grouped_topk": q_grouped_topk,
-        "daily_activity": q_daily_activity,
-        "ohlc_weekly": q_ohlc_weekly,
-        "vwap_monthly": q_vwap_monthly,
-        "drawdown": q_drawdown,
-        "returns_series": q_returns_series,
-        "autocorr1": q_autocorr1,
-        "interval_week1": q_interval_week1,
-        "interval_burst": q_interval_burst,
-        "sample_group": q_sample_group,
-        "group_quantiles": q_group_quantiles,
-        "cross_zscore": q_cross_zscore,
-        "rolling_zscore": q_rolling_zscore,
-        "tpch_q3": q_tpch_q3,
-        "diverse_sample": q_diverse_sample,
-        "market_beta": q_market_beta,
-        "seasonal_profile": q_seasonal_profile,
-        "dedup_report": q_dedup_report,
-        "salted_agg": q_salted_agg,
-        "props_json": q_props_json,
-        "seasonal_anomaly": q_seasonal_anomaly,
-        "fuzzy_names": q_fuzzy_names,
-        "quantile_bins": q_quantile_bins,
-        "target_encode": q_target_encode,
-        "scd2_track": q_scd2_track,
-        "scd2_pit": q_scd2_pit,
-        "attribution": q_attribution,
-        "basket_pairs": q_basket_pairs,
-        "phrase_hits": q_phrase_hits,
-        "rank_features": q_rank_features,
-        "split_leakage": q_split_leakage,
-        "sales_cube": q_sales_cube,
-        "tpch_q5": q_tpch_q5,
-        "snapshot_diff": q_snapshot_diff,
-        "transitions": q_transitions,
-        "twap_daily": q_twap_daily,
-        "gap_report": q_gap_report,
-    }
 
 
 def _bm25_sql(k1: float = 1.2, b: float = 0.75, k: int = 50) -> str:
@@ -10056,6 +9490,47 @@ def _all_oracle_sql() -> dict[str, str]:
             WHERE rk <= 20
         """,
     }
+
+
+# ----------------------------------------------------------------------
+# registry
+# ----------------------------------------------------------------------
+
+# Every module-level q_<name> above is registered as <name>.  The driver
+# checks queries(), which is DRIVER_WINDOW in this order;
+# tests/test_oracle_extra.py and tools/check_oracle.py check every other
+# registered query locally.  The window's rotation history is in git
+# and in CORRECTNESS_r*.json.
+_QUERIES = {n[2:]: f for n, f in globals().items() if n.startswith("q_")}
+
+DRIVER_WINDOW = (
+    "embed_incr_dedup", "semantic_incr_dedup", "media_catalog",
+    "audio_stream_incr", "video_snippet_search", "video_segments",
+    "audio_overlap_dedup", "audio_overlap_incr", "audio_rate_dedup",
+    "video_dual_dedup", "video_dual_incr", "audio_ber_verify",
+    "image_crop_verify", "audio_hop_fine_dedup", "video_residue_dedup",
+    "video_residue_incr", "audio_overlap_snippet", "image_incr_dedup",
+    "hybrid_search", "pack_sequences", "training_mix", "hard_negatives",
+    "tpch_q2", "tpch_q7", "tpch_q8", "tpch_q9", "tpch_q10", "tpch_q11",
+    "tpch_q15", "tpch_q16", "tpch_q19", "tpch_q20", "tpch_q21",
+    "ngram_novelty", "asof_multikey", "zipf_fit", "int8_quantize",
+    "source_overlap", "pack_efficiency", "centroid_drift",
+    "window_while_par", "group_ols", "mad_outliers", "interval_burst",
+    "seasonal_anomaly", "scd2_track", "rank_features", "split_leakage",
+    "sales_cube", "transitions")
+
+
+def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return dict(_QUERIES)
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {n: _QUERIES[n] for n in DRIVER_WINDOW}
+
+
+def oracle_sql() -> dict[str, str]:
+    sql = _all_oracle_sql()
+    return {n: sql[n] for n in DRIVER_WINDOW}
 
 
 if __name__ == "__main__":  # manual smoke

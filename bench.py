@@ -546,6 +546,32 @@ def _write_notes(timings: dict[str, float], total: float, sf,
         f.write("\n".join(lines))
 
 
+def warm_up(spark, sf_dir: str, cpus: int) -> tuple[float, float]:
+    """The warm-up every query harness (this file, tools/microbench.py,
+    tools/profile_query.py) runs OUTSIDE its timed loop; returns
+    (warm-up seconds, fixture-cache seconds).
+
+    JVM/codegen spin-up, parquet footer reads and the first-shuffle
+    machinery would otherwise land in whichever query runs first; the
+    Python/Arrow UDF workers are spun up (one per core) so the first
+    pandas-UDF query measures its plan, not worker cold-start.  Then
+    warm_fixture_caches builds the media fixture parquet caches and the
+    registered queries' clone-transform caches (trim / resample / crop
+    re-uploads), so media queries measure the operator, not the fixture
+    encode."""
+    from pyspark.sql import functions as F
+
+    t0 = time.time()
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    entrymod.q_group_agg(spark, sf_dir).count()
+    entrymod.q_asof_join(spark, sf_dir).count()
+    _warm = F.pandas_udf(lambda v: v * 1.0, "double")
+    spark.range(10_000).repartition(cpus).select(
+        _warm(F.col("id").cast("double"))).count()
+    warm_sec = time.time() - t0
+    return warm_sec, entrymod.warm_fixture_caches(spark, sf_dir)
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -588,33 +614,8 @@ def main():
     print(f"# steal probe: {probe_steal}%", file=sys.stderr)
     qs = entrymod._all_queries()
     names = sorted(qs)  # the `qv` order — reconstructible from the repo
-    # warm-up OUTSIDE the timed loop: JVM/codegen spin-up, parquet
-    # footer reads, and the first-shuffle machinery otherwise land in
-    # whichever query runs first and masks round-over-round deltas
-    t0 = time.time()
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    qs["group_agg"](spark, sf_dir).count()
-    qs["asof_join"](spark, sf_dir).count()
-    # spin up the Python/Arrow UDF workers too (one per core) so the
-    # first pandas-UDF query measures its plan, not worker cold-start
-    from pyspark.sql import functions as F
-
-    _warm = F.pandas_udf(lambda v: v * 1.0, "double")
-    spark.range(10_000).repartition(cpus).select(
-        _warm(F.col("id").cast("double"))).count()
-    print(f"# warmup: {time.time()-t0:.2f}s", file=sys.stderr)
-    # media fixture cache (r10 VERDICT ask #5): the closed-form dHash
-    # PNG fixture is encoded ONCE into a write-once parquet cache here,
-    # OUTSIDE the timed loop, so the three image queries measure
-    # decode + banded join + closure — not stdlib zlib throughput.
-    # The split is visible: fixture-encode seconds print here and land
-    # in BENCH_NOTES.md.
-    # r15: one entry point builds the four media fixture caches AND
-    # the twelve registered queries' clone-transform caches (trim /
-    # resample / crop re-uploads — VERDICT r14 ask #6: measure the
-    # operator, not the fixture re-encode); seconds reported here and
-    # in BENCH_NOTES, excluded from every query timing.
-    fixture_sec = entrymod.warm_fixture_caches(spark, sf_dir)
+    warm_sec, fixture_sec = warm_up(spark, sf_dir, cpus)
+    print(f"# warmup: {warm_sec:.2f}s", file=sys.stderr)
     print(f"# media fixture + clone caches: {fixture_sec}s "
           "(excluded from query timings)", file=sys.stderr)
     from fsharp_dataframe_spark.functions.util import release_cached

@@ -1675,6 +1675,10 @@ def _aligned_match(left: DataFrame, right: DataFrame, max_hamming: int,
             & (F.col("l.qv") == F.col("r.qv")))
     if left is right:
         cond = cond & (F.col("l.id") < F.col("r.id"))
+    else:
+        # a re-ingested batch may share ids with the corpus: no
+        # self-pairs (the _offset_votes guard)
+        cond = cond & (F.col("l.id") != F.col("r.id"))
     matched = (
         l.join(r, cond)
         .select(F.col("l.id").alias(a), F.col("r.id").alias(b),

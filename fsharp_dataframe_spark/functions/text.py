@@ -46,10 +46,6 @@ def bpe_ish_token_count(col: Column) -> Column:
     return F.size(F.filter(pieces, lambda t: t != ""))
 
 
-def char_count(col: Column) -> Column:
-    return F.length(col)
-
-
 def punct_ratio(col: Column) -> Column:
     """Punctuation chars / total chars (NULL-safe, 0 for empty)."""
     total = F.length(col)

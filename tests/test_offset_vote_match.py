@@ -64,6 +64,22 @@ def test_cross_equals_self_restricted_to_old_new_pairs(spark, twin):
     assert got_pt == exp
 
 
+@pytest.mark.parametrize("cross", [
+    "cross_video_near_dup", "cross_audio_stream_near_dup",
+    "cross_video_near_dup_offset", "cross_audio_overlap_near_dup",
+    "cross_video_near_dup_dual"])
+def test_cross_matchers_skip_self_pairs_on_shared_ids(spark, cross):
+    """A re-ingested batch whose ids overlap the corpus (4..11 here)
+    never reports a clip as its own duplicate."""
+    make = (M.make_fake_audio_stream_media if "audio" in cross
+            else M.make_fake_video_media)
+    media = make(spark, 16)
+    new = media.filter(F.col("media_id") >= 4)
+    old = media.filter(F.col("media_id") < 12)
+    out = getattr(M, cross)(new, old)
+    assert out.filter(F.col("new_id") == F.col("old_id")).count() == 0
+
+
 _AUDIO_PT = "aid long, win_idx int, sh long, q int, qv long"
 _VIDEO_PT = "vid long, frame_idx int, sh long, q int, qv long"
 

@@ -1,4 +1,4 @@
-"""Strict dtype lint over ALL oracles (declared + held-out).
+"""Strict dtype lint over ALL oracles (every registered query).
 
 The driver's correctness harness hashes EXACT values: a Spark BIGINT
 11757 vs a DuckDB HUGEINT-widened 11757.0 (fetched as float64) is a
@@ -29,8 +29,8 @@ from tools.check_oracle import TABLES
 
 SF = "/root/testdata/sf0.001"
 
-_ALL_ORACLES = {**entrymod.oracle_sql(), **entrymod.extra_oracle_sql()}
-_ALL_QUERIES = {**entrymod.queries(), **entrymod.extra_queries()}
+_ALL_ORACLES = entrymod._all_oracle_sql()
+_ALL_QUERIES = entrymod._all_queries()
 
 _DUCK_INT = {"TINYINT", "SMALLINT", "INTEGER", "BIGINT",
              "UTINYINT", "USMALLINT", "UINTEGER", "UBIGINT"}

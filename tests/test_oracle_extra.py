@@ -1,11 +1,12 @@
-"""DuckDB oracle parity for the held-out queries.
+"""DuckDB oracle parity for the registered queries outside the driver
+window.
 
-The driver's correctness harness checks the first 50 entries of
-``__spark_entry__.queries()``; the queries in ``EXTRA_QUERIES`` are held
-out of that registry to keep every declared query under the hard
-signal.  This test keeps the SAME oracle comparison running for them
-locally (sf0.001), using the identical canonicalize/compare contract as
-tools/check_oracle.py.
+The driver's correctness harness checks ``__spark_entry__.queries()``,
+which is ``DRIVER_WINDOW`` (50 names).  This test keeps the SAME oracle
+comparison running locally (sf0.001) for every other registered query,
+using the identical canonicalize/compare contract as
+tools/check_oracle.py, and pins the registry itself: each module-level
+``q_<name>`` is registered as ``<name>`` and has an oracle.
 """
 
 import os
@@ -31,10 +32,13 @@ def con():
     c.close()
 
 
-@pytest.mark.parametrize("name", sorted(entrymod.EXTRA_QUERIES))
+_HELD_OUT = sorted(set(entrymod._all_queries()) - set(entrymod.DRIVER_WINDOW))
+
+
+@pytest.mark.parametrize("name", _HELD_OUT)
 def test_extra_query_matches_oracle(spark, con, name):
-    q = entrymod.extra_queries()[name]
-    sql = entrymod.extra_oracle_sql()[name]
+    q = entrymod._all_queries()[name]
+    sql = entrymod._all_oracle_sql()[name]
     sdf = q(spark, SF).toPandas()
     odf = con.execute(sql).df()
     problems = compare(name, sdf, odf)
@@ -42,9 +46,15 @@ def test_extra_query_matches_oracle(spark, con, name):
 
 
 def test_registry_is_within_driver_window():
-    # exactly the split we promised: every declared query fits the
-    # driver's 50-query harness window, extras stay locally checked
-    qs = entrymod.queries()
-    assert len(qs) <= 50, len(qs)
-    assert not set(entrymod.EXTRA_QUERIES) & set(qs)
-    assert set(entrymod.extra_oracle_sql()) == set(entrymod.EXTRA_QUERIES)
+    # the registry is derived from the q_<name> definitions; the only
+    # hand-written name list is the driver's 50-query window
+    qs = entrymod._all_queries()
+    defined = {n[2:]: f for n, f in vars(entrymod).items()
+               if n.startswith("q_") and callable(f)}
+    assert qs == defined
+    assert set(qs) == set(entrymod._all_oracle_sql())
+    window = entrymod.DRIVER_WINDOW
+    assert len(window) == len(set(window)) == 50, len(window)
+    assert set(window) <= set(qs), sorted(set(window) - set(qs))
+    assert list(entrymod.queries()) == list(entrymod.oracle_sql()) \
+        == list(window)

@@ -14,8 +14,8 @@ SF = "/root/testdata/sf0.001"
 
 
 def _plan(spark, name):
-    # _all_queries: plan guards must keep running for queries rotated
-    # into the held-out set (the driver window rotation, r5)
+    # _all_queries: plan guards must keep running for queries outside
+    # the driver window (DRIVER_WINDOW)
     return entry._all_queries()[name](spark, SF)._jdf.queryExecution().executedPlan().toString()
 
 

@@ -30,8 +30,7 @@ def test_all_22_tpch_classes_registered():
     have = {k for k in entry._all_queries() if k.startswith("tpch_q")}
     assert have == {f"tpch_q{i}" for i in range(1, 23)}, (
         "the full 22-query TPC-H plan-class suite must stay registered")
-    oracles = {**entry.oracle_sql(), **entry.extra_oracle_sql()}
-    assert have <= set(oracles), "every TPC-H query needs a DuckDB oracle"
+    assert have <= set(entry._all_oracle_sql()), "every TPC-H query needs a DuckDB oracle"
 
 
 # ------------------------------------------------------------- q2

@@ -36,6 +36,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
+from bench import _cpu_times, _steal_pct, warm_up
 from fsharp_dataframe_spark import get_spark
 
 
@@ -79,17 +80,10 @@ def main() -> None:
         master=f"local[{cpus}]",
         shuffle_partitions=cpus,
     )
-    # bench.py's warm-up discipline: JVM/codegen, first shuffle, Arrow
-    # workers — so repeat #1 measures the plan, not cold-start.
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    qs["group_agg"](spark, sf_dir).count()
-    qs["asof_join"](spark, sf_dir).count()
-    from pyspark.sql import functions as F
-
-    _warm = F.pandas_udf(lambda v: v * 1.0, "double")
-    spark.range(10_000).repartition(cpus).select(
-        _warm(F.col("id").cast("double"))).count()
-
+    # bench.py's warm-up (JVM/codegen, first shuffle, Arrow workers,
+    # media fixture caches) so repeat #1 measures the plan, not
+    # cold-start.
+    warm_up(spark, sf_dir, cpus)
     from fsharp_dataframe_spark.functions.util import release_cached
 
     if preload:
@@ -99,8 +93,6 @@ def main() -> None:
             release_cached()
         print(f"# preload: {preload} queries in "
               f"{time.time()-t0:.1f}s (untimed)", file=sys.stderr)
-
-    from bench import _cpu_times, _steal_pct
 
     load0 = round(os.getloadavg()[0], 2)
     total_median = 0.0

@@ -32,6 +32,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
+from bench import warm_up
 from fsharp_dataframe_spark import get_spark
 
 
@@ -67,17 +68,9 @@ def main() -> None:
         extra_conf=extra,
     )
     sc = spark.sparkContext
-    # bench.py's warm-up discipline (JVM/codegen/Arrow workers + the
-    # media fixture parquet caches) so timings measure the plan.
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    qs["group_agg"](spark, sf_dir).count()
-    qs["asof_join"](spark, sf_dir).count()
-    from pyspark.sql import functions as F
-
-    _warm = F.pandas_udf(lambda v: v * 1.0, "double")
-    spark.range(10_000).repartition(cpus).select(
-        _warm(F.col("id").cast("double"))).count()
-    entrymod.warm_fixture_caches(spark, sf_dir)
+    # bench.py's warm-up (JVM/codegen/Arrow workers + the media
+    # fixture parquet caches) so timings measure the plan.
+    warm_up(spark, sf_dir, cpus)
     from fsharp_dataframe_spark.functions.util import release_cached
 
     release_cached()
